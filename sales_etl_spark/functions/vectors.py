@@ -13,12 +13,50 @@ serialization) — see operators/similarity.py for the scale notes.
 
 from __future__ import annotations
 
+import math
+from collections.abc import Iterable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
 def _col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
+
+
+# ---------------------------------------------------------------------------
+# Literal vectors as SQL text (driver-side model state → one JVM call)
+# ---------------------------------------------------------------------------
+
+
+def sql_literal(x: float | int) -> str:
+    """SQL text of one number, typed as ``F.lit(x)`` types it.
+
+    A Python ``int`` stays an integer literal (INT, or BIGINT past 32
+    bits); anything else is a DOUBLE written as ``repr(float(x)) + "D"``
+    — the shortest string that round-trips, which Spark's parser reads
+    back with ``Double.parseDouble``, so the literal is bit-identical
+    to ``F.lit(float(x))`` (``-0.0`` and subnormals included).
+    Non-finite values have no SQL literal and raise ``ValueError``."""
+    if isinstance(x, int):
+        return str(x)
+    v = float(x)
+    if not math.isfinite(v):
+        raise ValueError(f"non-finite value has no SQL literal: {v!r}")
+    return repr(v) + "D"
+
+
+def lit_array_sql(values: Iterable[float | int]) -> str:
+    """``array(...)`` SQL text of :func:`sql_literal` elements."""
+    return f"array({', '.join(sql_literal(v) for v in values)})"
+
+
+def lit_array(values: Iterable[float | int]) -> Column:
+    """Literal array column, equal to ``F.array(*map(F.lit, values))``
+    but built in ONE Py4J call instead of two per element — the
+    driver-side codebooks, centroids and hyperplanes enter plans as
+    these (a 16x8 codebook was ~2.7k round trips element-wise)."""
+    return F.expr(lit_array_sql(values))
 
 
 def to_double(vec: Column | str) -> Column:

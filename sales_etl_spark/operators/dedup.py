@@ -19,7 +19,9 @@ across runs/partitions, no Python in the loop.
 
 from __future__ import annotations
 
+import logging
 import threading
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -792,6 +794,22 @@ def simhash(
 _CACHE_SLOTS: dict[tuple[int, str], DataFrame] = {}
 _CACHE_SLOTS_LOCK = threading.Lock()
 
+log = logging.getLogger(__name__)
+
+
+@contextmanager
+def _quiet_if_session_stopped(df: DataFrame, action: str):
+    """Run a cache-bookkeeping call on ``df``: an error is expected
+    (and ignored) only once the frame's session has been stopped —
+    PySpark drops the context's JVM handle then. On a live session the
+    failure means a frame may run uncached, so it is logged."""
+    try:
+        yield
+    except Exception:
+        if df.sparkSession.sparkContext._jsc is not None:
+            log.warning("slot cache %s failed on a live session", action,
+                        exc_info=True)
+
 
 def _rearm_slot_caches(spark) -> None:
     """Re-register any of this session's slot frames whose CacheManager
@@ -811,18 +829,16 @@ def _rearm_slot_caches(spark) -> None:
     with _CACHE_SLOTS_LOCK:
         frames = [df for (s, _), df in _CACHE_SLOTS.items() if s == sid]
     for df in frames:
-        try:
+        with _quiet_if_session_stopped(df, "re-arm"):
             if not df.storageLevel.useMemory and not df.storageLevel.useDisk:
                 df.cache()
-        except Exception:
-            pass  # session already stopped
 
 
 try:  # registry import is cycle-safe: plans.registry imports nothing from operators
     from sales_etl_spark.plans.registry import register_plan_cache_rearm
 
     register_plan_cache_rearm(_rearm_slot_caches)
-except Exception:  # pragma: no cover — standalone operator use
+except ImportError:  # pragma: no cover — standalone operator use
     pass
 
 
@@ -850,11 +866,9 @@ def _slot_cache(df: DataFrame, slot: str) -> DataFrame:
         prev = _CACHE_SLOTS.get(key)
         _CACHE_SLOTS[key] = cached
     if prev is not None and prev is not cached:
-        try:
+        with _quiet_if_session_stopped(prev, "eviction"):
             if not prev.sameSemantics(cached):
                 prev.unpersist(blocking=False)
-        except Exception:
-            pass  # previous occupant's session already stopped
     return cached
 
 

@@ -26,7 +26,10 @@ from pyspark.sql.window import Window
 from sales_etl_spark.functions.vectors import (
     cosine_prenorm_rounded,
     dot_double,
+    lit_array,
+    lit_array_sql,
     norm,
+    sql_literal,
     to_double,
 )
 
@@ -159,7 +162,7 @@ def lsh_signature(vec_col, planes: np.ndarray):
     multiply the cast cost by L·b."""
     bits = []
     for i, plane in enumerate(planes):
-        lit_plane = F.array(*[F.lit(float(v)) for v in plane])
+        lit_plane = lit_array(plane)
         bits.append(
             F.when(dot_double(vec_col, lit_plane) >= 0, F.lit(2**i)).otherwise(
                 F.lit(0)
@@ -358,12 +361,7 @@ def _kmeans_fit(sample: np.ndarray, n_centroids: int, iters: int = 5) -> np.ndar
 
 
 def _centroid_lit(cents: np.ndarray):
-    return F.array(
-        *[
-            F.array(*[F.lit(float(v)) for v in row])
-            for row in cents
-        ]
-    )
+    return F.expr(f"array({', '.join(lit_array_sql(row) for row in cents)})")
 
 
 def _centroid_scores(vec_col, vec_norm, cents: np.ndarray):
@@ -379,7 +377,7 @@ def _centroid_scores(vec_col, vec_norm, cents: np.ndarray):
     boundary tie — it changes a candidate list assignment, never a
     returned score."""
     norms = [float(np.sqrt(np.dot(row, row))) for row in cents]
-    norms_lit = F.array(*[F.lit(v) for v in norms])
+    norms_lit = lit_array(norms)
     return F.transform(
         _centroid_lit(cents),
         lambda c, i: F.struct(
@@ -487,37 +485,40 @@ def ivf_topk(
 # ---------------------------------------------------------------------------
 
 
-def _pq_slice(vec_col: str, m: int, sub_d: int):
-    """The m-th length-``sub_d`` subvector (1-based slice)."""
-    return F.slice(F.col(vec_col), m * sub_d + 1, sub_d)
+def _quote_ident(name: str) -> str:
+    """Backtick-quoted SQL identifier (inner backticks doubled)."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def _sq_l2_fold(subvec, cv_col):
-    """sq_l2 between a row subvector and a codeword ARRAY COLUMN via
-    the zip_with/aggregate fold — the identical IEEE sequence as a
-    left-associated unrolled sum (0.0 + t₁ ≡ t₁; every tᵢ = dᵢ² ≥ 0,
-    so the seed never flips a sign bit).
+def _pq_slice(vec_col: str, m: int, sub_d: int) -> str:
+    """SQL text of the m-th length-``sub_d`` subvector (1-based slice)."""
+    return f"slice({_quote_ident(vec_col)}, {m * sub_d + 1}, {sub_d})"
+
+
+def _sq_l2_fold(subvec: str, cv: str) -> str:
+    """SQL text of sq_l2 between a row subvector and a codeword array
+    (both SQL expressions) via the zip_with/aggregate fold — the
+    identical IEEE sequence as a left-associated unrolled sum
+    (0.0 + t₁ ≡ t₁; every tᵢ = dᵢ² ≥ 0, so the seed never flips a
+    sign bit).
 
     Round-5 tried the unrolled literal expression tree instead,
     betting on whole-stage codegen — and janino REJECTED the
     ~14.6k-line generated class (m·k·sub_d = 1024 unrolled terms in
     one projection can't be method-split once WSCG has piped the
     inputs into locals), so Spark silently ran the whole stage
-    interpreted AND paid two doomed compile attempts per run (the r5
-    judge caught the `ERROR CodeGenerator` pair). The HOF form keeps
-    the generated stage tiny — the fold is one CodegenFallback leaf,
-    everything around it still compiles — which is what actually
-    executes fast; tests/test_plans.py locks the query under
+    interpreted AND paid two doomed compile attempts per run. The HOF
+    form keeps the generated stage tiny — the fold is one
+    CodegenFallback leaf, everything around it still compiles;
+    tests/test_plans.py locks the query under
     spark.sql.codegen.fallback=false so a giant-class regression
-    fails loudly instead of silently interpreting."""
-    return F.aggregate(
-        F.zip_with(
-            subvec,
-            cv_col,
-            lambda x, y: (x.cast("double") - y) * (x.cast("double") - y),
-        ),
-        F.lit(0.0),
-        lambda acc, t: acc + t,
+    fails loudly instead of silently interpreting. It is SQL text so
+    that _pq_best can hand the whole argmin to the JVM parser in one
+    call."""
+    return (
+        f"aggregate(zip_with({subvec}, {cv}, (x, y) -> "
+        "(CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
+        "0.0D, (acc, t) -> acc + t)"
     )
 
 
@@ -532,38 +533,33 @@ def _sq_l2_const(a: list[float], b: list[float]) -> float:
     return total
 
 
-def _pq_best(subvec, codebook: list[tuple[int, list[float]]], q_sub):
-    """Literal-codebook argmin struct for one subspace: the codebook
-    enters as ONE literal array<struct<code, cv, adc>> and a
-    ``transform`` scores every code by round(sq_l2, 6);  ``array_min``
-    picks (distance, code) lexicographically — the kmeans-assign move.
-    The struct CARRIES the code's ADC term (distance from the QUERY
-    subvector to the code word — a pure constant, precomputed in
-    Python doubles with the same left-associated IEEE sequence), so
-    the encode and the lookup are one array_min. See _sq_l2_fold for
-    why this is HOFs over a literal array rather than an unrolled
-    expression tree."""
-    book = F.array(
-        *[
-            F.struct(
-                F.lit(code).cast("long").alias("code"),
-                F.array(*[F.lit(float(b)) for b in cv]).alias("cv"),
-                F.round(
-                    F.lit(_sq_l2_const(q_sub, cv)).cast("double"), 6
-                ).alias("adc"),
-            )
-            for code, cv in codebook
-        ]
+def _pq_best(subvec: str, codebook: list[tuple[int, list[float]]], q_sub):
+    """Literal-codebook argmin struct for one subspace, built as ONE
+    SQL expression: one Py4J call, where element-wise ``F.lit`` /
+    ``F.struct`` / lambda construction cost ~2.7k round trips per
+    16x8 codebook. The codebook enters as a literal
+    array<struct<code, cv, adc>> (codes ``CAST(n AS BIGINT)``, doubles
+    written by functions.vectors.sql_literal, which the parser reads
+    back bit-for-bit); a ``transform`` scores every code by
+    round(sq_l2, 6) and ``array_min`` picks (distance, code)
+    lexicographically — the kmeans-assign move. The struct CARRIES the
+    code's ADC term (distance from the QUERY subvector to the code
+    word — a pure constant, precomputed in Python doubles with the
+    same left-associated IEEE sequence), so the encode and the lookup
+    are one array_min. ``subvec`` is SQL text (_pq_slice, or the
+    quoted vector column); see _sq_l2_fold for why this is HOFs over a
+    literal array rather than an unrolled expression tree."""
+    book = ", ".join(
+        f"struct(CAST({int(code)} AS BIGINT) AS code, "
+        f"{lit_array_sql(float(b) for b in cv)} AS cv, "
+        f"round({sql_literal(_sq_l2_const(q_sub, cv))}, 6) AS adc)"
+        for code, cv in codebook
     )
-    scored = F.transform(
-        book,
-        lambda c: F.struct(
-            F.round(_sq_l2_fold(subvec, c["cv"]), 6).alias("d"),
-            c["code"].alias("code"),
-            c["adc"].alias("adc"),
-        ),
+    return F.expr(
+        f"array_min(transform(array({book}), c -> struct("
+        f"round({_sq_l2_fold(subvec, 'c.cv')}, 6) AS d, "
+        "c.code AS code, c.adc AS adc)))"
     )
-    return F.array_min(scored)
 
 
 def pq_topk(
@@ -587,34 +583,36 @@ def pq_topk(
     tiebreak).
 
     Spark-first shape — the Lloyd/PCA bounded-driver-state pattern:
-    codebook training is ONE map-only assign pass (literal seed
-    codebooks, in-row argmin for all ``m_subs`` subspaces in one
-    projection) into ONE partial-aggregated exchange of
-    m·k·sub_d ≤ 1024 nano-unit rows (the only thing collected);
-    encode+score is then MAP-ONLY (updated codebooks and the ADC
-    terms re-enter as literals — each row's estimate never touches
-    the query vector), and top-k compiles to TakeOrderedAndProject.
-    At 100 TB: training cost is one scan + one bounded exchange,
-    scoring runs at scan speed over 8-byte codes — the reason PQ is
-    the production tier when vectors no longer fit in RAM.
+    the query vector and the seeds arrive in ONE collect
+    (_pq_driver_state); codebook training is ONE map-only assign pass
+    (literal seed codebooks, in-row argmin for all ``m_subs``
+    subspaces in one projection) into ONE partial-aggregated exchange
+    of m·k·sub_d ≤ 1024 nano-unit rows (the only other thing
+    collected); encode+score is then MAP-ONLY (updated codebooks and
+    the ADC terms re-enter as literals — each row's estimate never
+    touches the query vector), and top-k compiles to
+    TakeOrderedAndProject. Each per-subspace argmin is one SQL
+    expression (_pq_best), so the build is a few jobs plus ~1.6k Py4J
+    round trips. At 100 TB: training cost is one scan + one bounded
+    exchange, scoring runs at scan speed over 8-byte codes — the
+    reason PQ is the production tier when vectors no longer fit in
+    RAM.
 
     Cross-engine exactness (the emb_kmeans_lloyd recipe): assignment
     distances round to 1e-6 with code-id tiebreaks; centroid updates
     quantize elements to integer nano-units and means to micro-unit
     doubles; ADC terms round to 1e-6 and sum as exact micro longs."""
+    from sales_etl_spark.operators.skew import spread_narrow_input
+
+    rows = _pq_driver_state(corpus, query_id, k_codes, id_col, vec_col)
     # r12 (guide §2.5): the local embeddings table is one parquet row
     # group, so the interpreted-HOF argmin scan — the whole scoring
     # cost — ran on one core; spread the narrow (id, vector) frame
-    # first (conditional no-op at scale). The driver collects below
-    # read through the same spread frame (one small exchange).
-    from sales_etl_spark.operators.skew import spread_narrow_input
-
+    # first (conditional no-op at scale).
     corpus = spread_narrow_input(corpus)
-    q, q_subs, sub_d = _pq_query_state(
-        corpus, query_id, m_subs, id_col, vec_col
-    )
-    trained = _pq_train(corpus, q_subs, sub_d, m_subs, k_codes,
-                        id_col, vec_col)
+    q_subs, sub_d = _pq_query_subs(rows[query_id], m_subs)
+    trained = _pq_train(corpus, _pq_seeds(rows, k_codes), q_subs, sub_d,
+                        m_subs, vec_col)
     est = _pq_est_micro(vec_col, trained, q_subs, m_subs, sub_d)
     return (
         corpus.filter(F.col(id_col) != query_id)
@@ -629,52 +627,65 @@ def pq_topk(
     )
 
 
-def _pq_query_state(
+def _pq_driver_state(
     corpus: DataFrame,
     query_id: int,
-    m_subs: int,
+    n_seeds: int,
     id_col: str,
     vec_col: str,
-) -> tuple[list[float], list[list[float]], int]:
-    """Driver state for one PQ/IVF-PQ query: the full query vector,
-    its per-subspace slices, and the subspace width."""
-    q_row = (
-        corpus.filter(F.col(id_col) == query_id).select(vec_col).collect()
-    )
-    q = [float(x) for x in q_row[0][0]]
+) -> dict[int, list[float]]:
+    """All driver state of one PQ/IVF-PQ query in ONE collect: the
+    ``id < n_seeds`` rows (codebook seeds, coarse centroids) and the
+    query row, as id → vector in Python doubles. Callers pass the
+    frame from BEFORE spread_narrow_input: the id filter then prunes
+    at the scan, where the spread frame would shuffle the whole corpus
+    for every collect."""
+    return {
+        r[0]: [float(x) for x in r[1]]
+        for r in corpus.filter(
+            (F.col(id_col) < n_seeds) | (F.col(id_col) == query_id)
+        )
+        .select(id_col, vec_col)
+        .collect()
+    }
+
+
+def _pq_seeds(
+    rows: dict[int, list[float]], n: int
+) -> list[tuple[int, list[float]]]:
+    """The ``id < n`` rows of the driver state, ascending by id."""
+    return sorted((i, v) for i, v in rows.items() if i < n)
+
+
+def _pq_query_subs(
+    q: list[float], m_subs: int
+) -> tuple[list[list[float]], int]:
+    """The query vector's per-subspace slices and the subspace width."""
     sub_d = len(q) // m_subs
-    q_subs = [q[m * sub_d : (m + 1) * sub_d] for m in range(m_subs)]
-    return q, q_subs, sub_d
+    return [q[m * sub_d : (m + 1) * sub_d] for m in range(m_subs)], sub_d
 
 
 def _pq_train(
     corpus: DataFrame,
+    seeds: list[tuple[int, list[float]]],
     q_subs: list[list[float]],
     sub_d: int,
     m_subs: int,
-    k_codes: int,
-    id_col: str,
     vec_col: str,
 ) -> list[list[tuple[int, list[float]]]]:
     """One deterministic Lloyd round per subspace from the vec_id<k
-    seeds: ONE map-only assign pass + ONE partial-aggregated exchange
-    of m·k·sub_d ≤ 1024 nano-unit rows (the only driver state).
-    Returns the trained per-subspace codebooks in micro-unit doubles
-    (the emb_kmeans_lloyd exactness recipe)."""
-    seeds_rows = sorted(
-        (r[0], [float(x) for x in r[1]])
-        for r in corpus.filter(F.col(id_col) < k_codes)
-        .select(id_col, vec_col)
-        .collect()
-    )
-    seeds = [
-        [(code, v[m * sub_d : (m + 1) * sub_d]) for code, v in seeds_rows]
+    ``seeds``: ONE map-only assign pass + ONE partial-aggregated
+    exchange of m·k·sub_d ≤ 1024 nano-unit rows (the only driver
+    state). Returns the trained per-subspace codebooks in micro-unit
+    doubles (the emb_kmeans_lloyd exactness recipe)."""
+    sub_seeds = [
+        [(code, v[m * sub_d : (m + 1) * sub_d]) for code, v in seeds]
         for m in range(m_subs)
     ]
 
     # -- train: one assign pass + one bounded exchange ---------------
     code_cols = [
-        _pq_best(_pq_slice(vec_col, m, sub_d), seeds[m], q_subs[m])[
+        _pq_best(_pq_slice(vec_col, m, sub_d), sub_seeds[m], q_subs[m])[
             "code"
         ].alias(f"__c{m}")
         for m in range(m_subs)
@@ -764,9 +775,12 @@ def ivfpq_topk(
     stage stays closed-form for the oracle.
 
     Spark-first shape: the coarse quantizer is the vec_id<n_lists
-    seed set (bounded driver state, same move as the PQ/Lloyd seeds);
-    cell assignment is ONE in-row argmin over the literal centroid
-    array (map-only — the same HOF-over-literals plan as _pq_best, so
+    seed set, fetched with the PQ seeds and the query vector in ONE
+    collect of ``id < max(k_codes, n_lists) OR id = query_id``
+    (_pq_driver_state — bounded driver state, same move as the
+    PQ/Lloyd seeds); cell assignment is ONE in-row argmin over the
+    literal centroid array, built as one SQL expression by the same
+    _pq_best as the PQ subspaces (map-only — HOF over literals, so
     whole-stage codegen holds); the query's probe set is computed
     driver-side from the same literals and prunes rows BEFORE any
     shuffle via an ``isin`` filter on the computed cell. At 100 TB
@@ -785,16 +799,13 @@ def ivfpq_topk(
     recipe. Returns (id, list_id, dist_est)."""
     from sales_etl_spark.operators.skew import spread_narrow_input
 
+    rows = _pq_driver_state(
+        corpus, query_id, max(k_codes, n_lists), id_col, vec_col
+    )
     corpus = spread_narrow_input(corpus)  # r12: see pq_topk
-    q, q_subs, sub_d = _pq_query_state(
-        corpus, query_id, m_subs, id_col, vec_col
-    )
-    coarse = sorted(
-        (r[0], [float(x) for x in r[1]])
-        for r in corpus.filter(F.col(id_col) < n_lists)
-        .select(id_col, vec_col)
-        .collect()
-    )
+    q = rows[query_id]
+    q_subs, sub_d = _pq_query_subs(q, m_subs)
+    coarse = _pq_seeds(rows, n_lists)
     # half-away-from-zero 6-dp rounding (floor(x*1e6+0.5) on the
     # nonnegative distances) — the SQL round() semantics, NOT
     # Python's banker's round(), so probe ties break identically
@@ -807,14 +818,14 @@ def ivfpq_topk(
     ]
     # in-row coarse assignment over the full-dim literal centroids;
     # q_sub=q makes the carried adc term the (unused) query distance
-    assign = _pq_best(F.col(vec_col), coarse, q)["code"]
+    assign = _pq_best(_quote_ident(vec_col), coarse, q)["code"]
     cand = (
         corpus.filter(F.col(id_col) != query_id)
         .withColumn("list_id", assign)
         .filter(F.col("list_id").isin([int(p) for p in probed]))
     )
-    trained = _pq_train(corpus, q_subs, sub_d, m_subs, k_codes,
-                        id_col, vec_col)
+    trained = _pq_train(corpus, _pq_seeds(rows, k_codes), q_subs, sub_d,
+                        m_subs, vec_col)
     est = _pq_est_micro(vec_col, trained, q_subs, m_subs, sub_d)
     return (
         cand.select(

@@ -340,7 +340,7 @@ def _kmeans_argmin(cents: list[tuple[int, list[float]]]):
         *[
             F.struct(
                 F.lit(cid).cast("long").alias("cid"),
-                F.array(*[F.lit(v) for v in vec]).alias("cv"),
+                vectors.lit_array(vec).alias("cv"),
             )
             for cid, vec in cents
         ]
@@ -590,7 +590,7 @@ def emb_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
         return F.aggregate(
             F.zip_with(
                 xd,
-                F.array(*[F.lit(c) for c in vec]),
+                vectors.lit_array(vec),
                 lambda x, c: F.floor(
                     (x - c) * (x - c) * F.lit(1_000_000_000_000.0)
                     + F.lit(0.5)
@@ -2087,7 +2087,7 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         return F.aggregate(
             F.zip_with(
                 F.col("xd"),
-                F.array(*[F.lit(c) for c in center]),
+                vectors.lit_array(center),
                 lambda x, c: F.floor(
                     (x - c) * (x - c) * F.lit(1_000_000_000_000.0)
                     + F.lit(0.5)

@@ -127,9 +127,10 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen'd regex/array expressions, zero UDFs. r12: the narrow
     (doc_id, text) frame spreads before the regex battery (guide §2.5
     — one local row group serialized 6 regex passes onto one core;
-    no-op at scale)."""
+    no-op at scale); only those two columns cross the exchange."""
     st = _star(spark, sf_dir)
-    return spread_narrow_input(st.documents).select(
+    docs = st.documents.select("doc_id", "text")
+    return spread_narrow_input(docs).select(
         "doc_id",
         TX.char_count("text").alias("n_chars_calc"),
         TX.word_count("text").alias("n_words"),

@@ -136,6 +136,46 @@ def ensure_protobuf() -> bool:
     return False
 
 
+#: Local-mode driver heap bounds (MiB). The cap is the heap the
+#: 128 GiB bench box was tuned with; the floor is Spark's own default.
+_DRIVER_MEM_MIN_MB = 1024
+_DRIVER_MEM_MAX_MB = 24 * 1024
+
+
+def available_memory_mb() -> float:
+    """The smaller of the cgroup memory limit and ``MemAvailable``
+    (MiB); whichever is unreadable is skipped, and with neither (no
+    ``/proc``) the answer sizes the heap at its 24 GiB cap."""
+    limits = []
+    for path in ("/sys/fs/cgroup/memory.max",
+                 "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as f:
+                text = f.read().strip()
+        except OSError:
+            continue
+        if text.isdigit() and int(text) < 1 << 60:  # v1 "no limit" is ~2^63
+            limits.append(int(text) / 2**20)
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    limits.append(int(line.split()[1]) / 1024)
+    except OSError:
+        pass
+    return min(limits, default=float(_DRIVER_MEM_MAX_MB * 2))
+
+
+def local_driver_memory() -> str:
+    """``spark.driver.memory`` for local mode: half the memory the
+    process can actually get, within 1–24 GiB. The other half is left
+    for the JVM's native memory, the Python driver and its workers —
+    a fixed 24g heap let the JVM grow past a 15 GiB box and be
+    OOM-killed mid-run."""
+    half = int(available_memory_mb() / 2)
+    return f"{max(_DRIVER_MEM_MIN_MB, min(_DRIVER_MEM_MAX_MB, half))}m"
+
+
 def get_spark(
     app_name: str = "sales-etl-spark",
     master: str | None = None,
@@ -146,7 +186,9 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS or *]`` when no
     cluster is configured. ``shuffle_partitions`` defaults to the
     parallelism of the master in local mode; on a real cluster leave it
-    unset and let AQE coalesce from a high initial number.
+    unset and let AQE coalesce from a high initial number. The local
+    driver heap is ``$SPARK_GRAFT_DRIVER_MEM`` when set, else
+    :func:`local_driver_memory`.
     """
     # Export the protobuf fallback onto PYTHONPATH BEFORE the JVM
     # gateway starts: Python workers inherit the JVM's environment, so
@@ -172,7 +214,7 @@ def get_spark(
         # over-splitting there is the opposite failure mode.
         builder = builder.config("spark.sql.files.maxPartitionBytes", "1m")
         # In local mode the driver JVM IS every executor, yet Spark's
-        # default driver heap is 1g — on this 128 GiB / 32-thread box
+        # default driver heap is 1g — on a 128 GiB / 32-thread box
         # that manifested as GC-locker stalls under bench load and, in
         # full-registry sweeps (190+ queries, one session), spurious
         # "Not enough memory to build and broadcast" failures on late
@@ -180,7 +222,8 @@ def get_spark(
         # launch; a real cluster sets executor/driver memory itself.
         builder = builder.config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or local_driver_memory(),
         )
     if shuffle_partitions is not None:
         builder = builder.config(

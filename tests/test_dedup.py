@@ -629,3 +629,36 @@ def test_substring_span_catches_embedded_literal_runs(spark):
     assert n_shared >= 70 and est_span == n_shared + 63
     assert (1, 3) in got  # repeated filler is itself a literal run
     assert not any(4 in p for p in got)
+
+
+def test_slot_cache_rearm_is_silent_only_for_stopped_sessions(caplog):
+    """A slot frame whose session was stopped fails its re-arm quietly;
+    the same failure on a live session is logged, since the frame may
+    then run uncached."""
+    import logging
+    from types import SimpleNamespace
+
+    from sales_etl_spark.operators import dedup
+
+    class Frame:
+        def __init__(self, jsc):
+            self.sparkSession = SimpleNamespace(
+                sparkContext=SimpleNamespace(_jsc=jsc)
+            )
+
+        @property
+        def storageLevel(self):
+            raise RuntimeError("storage level unavailable")
+
+    spark = object()
+    keys = [(id(spark), "live"), (id(spark), "stopped")]
+    dedup._CACHE_SLOTS[keys[0]] = Frame(jsc=object())
+    dedup._CACHE_SLOTS[keys[1]] = Frame(jsc=None)
+    try:
+        with caplog.at_level(logging.WARNING, logger=dedup.__name__):
+            dedup._rearm_slot_caches(spark)
+    finally:
+        for k in keys:
+            dedup._CACHE_SLOTS.pop(k)
+    assert len(caplog.records) == 1
+    assert "re-arm" in caplog.records[0].getMessage()

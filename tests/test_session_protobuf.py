@@ -50,3 +50,13 @@ def test_ensure_protobuf_fallback_exports_worker_pythonpath(monkeypatch):
         os.environ.get("TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK")
         == "true"
     )
+
+
+def test_local_driver_memory_is_half_of_available_within_bounds(monkeypatch):
+    """The local heap follows the memory the process can get: half of
+    it, never under Spark's 1 GiB default nor over 24 GiB."""
+    assert S.available_memory_mb() > 0
+    for avail_mb, heap in ((15 * 1024, "7680m"), (128 * 1024, "24576m"),
+                           (1000, "1024m")):
+        monkeypatch.setattr(S, "available_memory_mb", lambda m=avail_mb: m)
+        assert S.local_driver_memory() == heap

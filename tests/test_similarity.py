@@ -227,7 +227,9 @@ def test_pq_estimate_correlates_with_true_distance(spark):
 
     # the estimate must ORDER the space: true neighbors score below
     # the median estimated distance of the whole corpus
-    all_est = pq_topk(e, query_id=0, k=10**9).collect()
+    # k = corpus size keeps every estimate; a huge k would size the
+    # TakeOrderedAndProject buffer (2k entries) past any heap
+    all_est = pq_topk(e, query_id=0, k=e.count()).collect()
     est = {r.vec_id: r.dist_est for r in all_est}
     med = sorted(est.values())[len(est) // 2]
     true_mean = sum(est[i] for i in exact_ids) / len(exact_ids)
@@ -276,3 +278,79 @@ def test_ivfpq_probe_invariants(spark):
     flat = {r.vec_id: r.dist_est for r in pq_topk(e, query_id=0, k=500).collect()}
     for r in got:
         assert flat[r.vec_id] == r.dist_est
+
+
+def test_lit_array_matches_elementwise_literals_bit_for_bit(spark):
+    """The one-call SQL literal array is the element-wise ``F.lit``
+    array it replaces: same element type (a Python int stays INT) and
+    the same doubles down to the bit pattern — signed zero, the
+    smallest subnormal and ±1e308 included."""
+    import struct
+
+    import pytest
+
+    from sales_etl_spark.functions.vectors import lit_array
+
+    vals = [-0.0, 5e-324, 1e308, -1e308, 0.1, 1 / 3, -2.5, -1e-300, 7.0]
+    cases = {
+        "doubles": (lit_array(vals), F.array(*[F.lit(float(x)) for x in vals])),
+        "int": (lit_array([3, -4]), F.array(F.lit(3), F.lit(-4))),
+        "mixed": (lit_array([3, 0.1]), F.array(F.lit(3), F.lit(0.1))),
+    }
+    df = spark.range(1).select(
+        *[c.alias(f"{k}_new") for k, (c, _) in cases.items()],
+        *[c.alias(f"{k}_old") for k, (_, c) in cases.items()],
+    )
+    schema = {f.name: f.dataType for f in df.schema.fields}
+    row = df.collect()[0]
+    for k in cases:
+        assert schema[f"{k}_new"] == schema[f"{k}_old"], k
+        new, old = row[f"{k}_new"], row[f"{k}_old"]
+        assert new == old, k
+        if k != "int":
+            bits = [struct.pack("<d", x) for x in new]
+            assert bits == [struct.pack("<d", x) for x in old], k
+    assert struct.pack("<d", row["doubles_new"][0]) == struct.pack("<d", -0.0)
+
+    for bad in (float("nan"), float("inf"), float("-inf")):
+        with pytest.raises(ValueError):
+            lit_array([1.0, bad])
+
+
+def test_pq_builds_take_few_jobs_and_py4j_calls(spark):
+    """Cold builds of the PQ tiers: one driver-state collect plus the
+    codebook-training collect (≤5 jobs for ann_pq_topk, which may also
+    pay the session's first parquet schema read, ≤4 for
+    ann_ivfpq_topk), and each per-subspace argmin is one SQL
+    expression, so a build sends well under 3,000 Py4J commands
+    (element-wise literals sent ~44k)."""
+    import uuid
+
+    from sales_etl_spark.plans import QUERY_REGISTRY
+    from sales_etl_spark.plans.registry import clear_plan_cache
+
+    sc = spark.sparkContext
+    client = sc._gateway._gateway_client
+    send = client.send_command
+    for name, max_jobs in (("ann_pq_topk", 5), ("ann_ivfpq_topk", 4)):
+        clear_plan_cache()
+        group = f"{name}-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        calls = 0
+
+        def counting(*args, **kwargs):
+            nonlocal calls
+            calls += 1
+            return send(*args, **kwargs)
+
+        client.send_command = counting
+        try:
+            QUERY_REGISTRY[name].builder(spark, SF_DIR)
+        finally:
+            del client.send_command
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert len(jobs) <= max_jobs, (name, len(jobs))
+        assert calls < 3000, (name, calls)
+    clear_plan_cache()
