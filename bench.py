@@ -422,11 +422,11 @@ def main() -> None:
         of only labeling the corpse)."""
         # Each attempt measures from a fresh plan memo: a retried
         # window would otherwise reuse plans whose operator-internal
-        # cache() registrations the previous attempt's clearCache()
-        # dropped — builders never re-run on a memo hit, so those
-        # plans execute their raw lineage and time a DIFFERENT shape
-        # than attempt 1 (BENCH_r11 attempt 2: dedup_video_pairs
-        # 179 s uncached vs 2.4 s cached, r12 root-cause).
+        # cache() registrations (the inline two-consumer caches such
+        # as structure.py's _bm25_base) the previous attempt's
+        # clearCache() dropped — builders never re-run on a memo hit,
+        # so those plans execute their raw lineage and time a
+        # DIFFERENT shape than attempt 1.
         from sales_etl_spark.plans.registry import clear_plan_cache
 
         clear_plan_cache()

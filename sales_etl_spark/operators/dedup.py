@@ -19,12 +19,9 @@ across runs/partitions, no Python in the loop.
 
 from __future__ import annotations
 
-import logging
-import threading
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from sales_etl_spark.functions.text import (
     WORD_RE,
@@ -775,103 +772,6 @@ def simhash(
     return per_doc.select("doc", sig.alias("simhash"))
 
 
-#: One-slot cache registry for the banded perceptual frames (round 10
-#: — the r9 verdict's ask #7, turning the documented cache-lifecycle
-#: contract into an ENFORCED bound): the banded frame must stay
-#: cached while its returned pair frame is lazy (an in-function
-#: unpersist would evict before the consumer's action), but a
-#: long-lived session calling the operator repeatedly without
-#: ``clearCache()`` would otherwise accumulate one abandoned cached
-#: frame per call. Each operator therefore owns ONE slot: the next
-#: call evicts the previous occupant. Worst case for a caller that
-#: interleaves two live pair frames is a silent recompute of the
-#: evicted lineage — never a wrong result. Slots are keyed by
-#: (session, operator) so two independent SparkSessions in one
-#: process don't evict each other's frames, and the check-then-set is
-#: guarded by a lock so two racing threads can't both install a frame
-#: into one slot and leak the loser (the unbounded growth the slot
-#: exists to prevent).
-_CACHE_SLOTS: dict[tuple[int, str], DataFrame] = {}
-_CACHE_SLOTS_LOCK = threading.Lock()
-
-log = logging.getLogger(__name__)
-
-
-@contextmanager
-def _quiet_if_session_stopped(df: DataFrame, action: str):
-    """Run a cache-bookkeeping call on ``df``: an error is expected
-    (and ignored) only once the frame's session has been stopped —
-    PySpark drops the context's JVM handle then. On a live session the
-    failure means a frame may run uncached, so it is logged."""
-    try:
-        yield
-    except Exception:
-        if df.sparkSession.sparkContext._jsc is not None:
-            log.warning("slot cache %s failed on a live session", action,
-                        exc_info=True)
-
-
-def _rearm_slot_caches(spark) -> None:
-    """Re-register any of this session's slot frames whose CacheManager
-    entry was dropped by a caller's ``spark.catalog.clearCache()``.
-
-    Registered as a plan-memo re-arm hook (plans/registry.py): a
-    memoized query plan embeds the slot frame by object, so when the
-    memo skips the builder body nothing would otherwise re-``cache()``
-    the frame, and the plan silently executes its raw lineage —
-    measured ~50x slower for the perceptual pair queries because the
-    interpreted higher-order-function hash projection is inlined by
-    filter pushdown into per-row join predicates (BENCH_r11 attempt-2:
-    dedup_video_pairs 179 s uncached vs 2.4 s cached). Re-registration
-    is lazy (no job runs until the plan executes) and bounded by the
-    slot registry's one-frame-per-operator contract."""
-    sid = id(spark)
-    with _CACHE_SLOTS_LOCK:
-        frames = [df for (s, _), df in _CACHE_SLOTS.items() if s == sid]
-    for df in frames:
-        with _quiet_if_session_stopped(df, "re-arm"):
-            if not df.storageLevel.useMemory and not df.storageLevel.useDisk:
-                df.cache()
-
-
-try:  # registry import is cycle-safe: plans.registry imports nothing from operators
-    from sales_etl_spark.plans.registry import register_plan_cache_rearm
-
-    register_plan_cache_rearm(_rearm_slot_caches)
-except ImportError:  # pragma: no cover — standalone operator use
-    pass
-
-
-def _slot_cache(df: DataFrame, slot: str) -> DataFrame:
-    """Cache ``df`` and evict the (session, slot) key's previous
-    occupant (async, ignoring a stopped previous session), bounding
-    the operator's storage footprint to one live frame per slot per
-    session.
-
-    The eviction must NOT fire when the previous occupant is
-    semantically the same plan: ``DataFrame.unpersist`` removes cache
-    entries by CANONICALIZED PLAN, not by object identity, so
-    unpersisting a same-plan predecessor would evict the entry the
-    ``cache()`` call above just (re-)registered. A repeat caller —
-    e.g. a bench harness timing the same query back to back — would
-    then silently run every consumer against the UNCACHED lineage:
-    the banded frame's hash projection is an interpreted
-    higher-order-function expression that filter pushdown inlines
-    into per-row join predicates, measured 50x slower uncached
-    (dedup_video_pairs 2.4 s cached vs ~130 s, r12). Same-plan
-    repeats therefore keep the live entry and skip the unpersist."""
-    key = (id(df.sparkSession), slot)
-    cached = df.cache()
-    with _CACHE_SLOTS_LOCK:
-        prev = _CACHE_SLOTS.get(key)
-        _CACHE_SLOTS[key] = cached
-    if prev is not None and prev is not cached:
-        with _quiet_if_session_stopped(prev, "eviction"):
-            if not prev.sameSemantics(cached):
-                prev.unpersist(blocking=False)
-    return cached
-
-
 def simhash_pairs(
     df: DataFrame,
     id_col: str,
@@ -887,7 +787,14 @@ def simhash_pairs(
     shares a band, so set ``bands > max_hamming`` for exhaustive
     recall within the radius (defaults: 8 bands of 8 bits cover ≤7
     exactly and ≤8 with high probability). More bands = more candidate
-    join fan-out — the recall/cost dial."""
+    join fan-out — the recall/cost dial.
+
+    100 TB shape: both join sides are the SAME uncached banded frame,
+    so exchange reuse shares their shuffles — the tokenize and vote
+    pass over the corpus runs once and the other side reads a reused
+    exchange (the doc vote shuffle when AQE broadcasts the join, the
+    (band, bucket) shuffle when it sort-merges). Nothing is cached,
+    so nothing has to outlive the call."""
     band_width = 64 // bands
     mask = (1 << band_width) - 1
     sh = simhash(df, id_col, text_col)
@@ -902,11 +809,9 @@ def simhash_pairs(
             for q in range(bands)
         ]
     )
-    banded = _slot_cache(
-        sh.select("doc", "simhash", F.explode(band_arr).alias("bb"))
-        .select("doc", "simhash", "bb.band", "bb.bucket"),
-        "simhash_banded",
-    )
+    banded = sh.select(
+        "doc", "simhash", F.explode(band_arr).alias("bb")
+    ).select("doc", "simhash", "bb.band", "bb.bucket")
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -1185,47 +1090,38 @@ def banded_hamming_pairs(
     the pair join (near-constant media carry no discriminating power —
     the dedup_by_df_cap contract applied to perceptual buckets), so
     the self-join is pair-quadratic only within capped buckets. The
-    hot-bucket anti-join is left to the optimizer (AQE broadcasts it
-    while it is small; at corpus scale the drop list can reach ~4N/cap
-    rows and must be allowed to shuffle). The banded frame is cached —
-    its lineage includes the decode kernel and feeds the bucket count
-    plus both join sides (the simhash_pairs precedent); DISTINCT
-    before the Hamming filter so a pair colliding in several bands
-    verifies once.
+    bucket size is a window count over (band_idx, band_val), so the
+    cap costs no extra aggregate or anti-join; DISTINCT before the
+    Hamming filter so a pair colliding in several bands verifies once.
 
-    Cache lifecycle contract (shared with simhash_pairs): the banded
-    frame must stay cached while the returned pair frame is lazy (an
-    in-function ``unpersist`` would evict before the consumer's
-    action runs), so eviction is handled by the ONE-SLOT registry
-    (:func:`_slot_cache`): each call evicts the previous call's
-    banded frame, bounding the footprint to one live frame even in a
-    long-lived session that never calls ``clearCache()`` (enforced by
-    tests/test_dedup.py's consecutive-entries footprint test). The
-    repo harnesses additionally ``clearCache()`` between registry
-    entries, which also clears the slot's occupant."""
-    bands = _slot_cache(
-        hashed.select(
-            F.col(id_col),
-            "hash_lo",
-            "hash_hi",
-            F.posexplode(
-                F.array(
-                    F.col("hash_lo") % 65536,
-                    (F.col("hash_lo") / 65536).cast("bigint"),
-                    F.col("hash_hi") % 65536,
-                    (F.col("hash_hi") / 65536).cast("bigint"),
-                )
-            ).alias("band_idx", "band_val"),
-        ),
-        "banded_hamming",
+    100 TB shape: ONE shuffle of the banded rows on (band_idx,
+    band_val). The window count and both self-join sides share it —
+    the fingerprint lineage (the decode kernel) runs once and the other
+    join side is a reused exchange. Hot-bucket rows cross that shuffle
+    before the cap drops them (a ~4N/cap-row drop list used to be
+    broadcast and anti-joined map-side); in exchange the plan caches
+    nothing. The window also keeps the optimizer's inferred
+    ``isnotnull(hash_lo/hash_hi)`` above the shuffle, so the hash
+    expressions — interpreted higher-order folds for the image, audio
+    and video fingerprints — are never copied into a pushed per-row
+    filter."""
+    bands = hashed.select(
+        F.col(id_col),
+        "hash_lo",
+        "hash_hi",
+        F.posexplode(
+            F.array(
+                F.col("hash_lo") % 65536,
+                (F.col("hash_lo") / 65536).cast("bigint"),
+                F.col("hash_hi") % 65536,
+                (F.col("hash_hi") / 65536).cast("bigint"),
+            )
+        ).alias("band_idx", "band_val"),
     )
-    hot = (
-        bands.groupBy("band_idx", "band_val")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") > cap)
-        .select("band_idx", "band_val")
-    )
-    kept = bands.join(hot, ["band_idx", "band_val"], "left_anti")
+    kept = bands.withColumn(
+        "c",
+        F.count(F.lit(1)).over(Window.partitionBy("band_idx", "band_val")),
+    ).filter(F.col("c") <= cap)
     a = kept.alias("a")
     b = kept.alias("b")
     cand = (

@@ -1040,7 +1040,11 @@ def video_grid_signature(frames: DataFrame) -> DataFrame:
     bounded by the ``every_n`` sampling contract upstream (a long
     video contributes n_frames/every_n rows; cap the sampling stride
     per duration upstream if videos are unbounded), never raw pixels.
-    Everything else is in-row codegen-side higher-order functions."""
+    Everything else is in-row higher-order functions. Spark INTERPRETS
+    those (no codegen), so the hash projection is expensive per row —
+    a plan that lets the optimizer copy it into a pushed filter (e.g.
+    an inferred ``isnotnull(hash_lo)`` under a join) evaluates it
+    again; banded_hamming_pairs keeps such filters above its shuffle."""
     col_sums = F.expr(
         "transform(sequence(0, 7), c -> aggregate("
         " sequence(0, height - 1), CAST(0 AS BIGINT),"

@@ -2084,10 +2084,10 @@ def dedup_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     64-bit aHashes differ in <= 6 bits. Completes the LSH ladder the
     text tier already has (simhash_pairs: band -> exact Hamming) for
     the image modality. Plan and scale notes in the shared operator
-    (operators/dedup.py:banded_hamming_pairs): DF-capped buckets, the
-    banded frame cached across its three consumers, the hot-bucket
-    anti-join left to AQE, Hamming as two codegen bit_count XORs,
-    DISTINCT so multi-band collisions verify once."""
+    (operators/dedup.py:banded_hamming_pairs): DF-capped buckets
+    counted by a window over the one (band_idx, band_val) shuffle both
+    self-join sides reuse, no cache, Hamming as two codegen bit_count
+    XORs, DISTINCT so multi-band collisions verify once."""
     from sales_etl_spark.operators import dedup
 
     return dedup.banded_hamming_pairs(
@@ -2424,7 +2424,7 @@ def dedup_video_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     image dedup_phash_pairs, audio dedup_audio_pairs, video here),
     every one of them resolving through the SINGLE shared operator
     (operators/dedup.py:banded_hamming_pairs — DF-capped buckets,
-    cached banded frame, codegen bit_count XOR verify) and the same
+    one reused band shuffle, codegen bit_count XOR verify) and the same
     oracle verification suffix, so cap/threshold semantics cannot
     diverge across modalities."""
     from sales_etl_spark.operators import dedup

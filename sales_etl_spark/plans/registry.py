@@ -56,36 +56,14 @@ QUERY_REGISTRY: dict[str, QueryDef] = {}
 #: reuses a stale plan.
 _PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
-#: Re-arm hooks for operator-INTERNAL ``.cache()`` registrations
-#: (e.g. the banded perceptual frame in operators/dedup.py). A
-#: memoized plan embeds such a frame by object, but the CacheManager
-#: entry the operator registered at BUILD time does not survive a
-#: caller's ``spark.catalog.clearCache()`` — and because the memo
-#: skips the builder body, nothing ever re-registers it. The plan
-#: then silently executes its raw lineage, which for the perceptual
-#: pair queries is ~50x slower (the interpreted higher-order-function
-#: hash projection gets inlined into per-row join predicates; the
-#: BENCH_r11 attempt-2 driver record measured dedup_video_pairs at
-#: 179 s vs 2.4 s cached, r12 root-cause). Operators that own an
-#: internal cache register a hook here; every memo HIT replays the
-#: hooks so a dropped cache entry is re-registered (registration is
-#: lazy and idempotent — no job runs unless the plan executes).
-_PLAN_CACHE_REARM_HOOKS: list[Callable[[SparkSession], None]] = []
-
-
-def register_plan_cache_rearm(hook: Callable[[SparkSession], None]) -> None:
-    """Register a hook that re-arms an operator's internal cache
-    registrations for the given session (see _PLAN_CACHE_REARM_HOOKS)."""
-    _PLAN_CACHE_REARM_HOOKS.append(hook)
-
 
 def clear_plan_cache() -> None:
     """Drop every memoized plan so the next builder call re-runs the
     builder body. Harnesses that interleave ``clearCache()`` with
     repeated measurement passes call this at the top of each pass:
     builders re-register their operator-internal ``cache()`` frames
-    (the ~35 inline two-consumer caches the re-arm hooks don't cover),
-    so a retried pass measures the same plan shape as the first."""
+    (the inline two-consumer caches such as ``_bm25_base``), so a
+    retried pass measures the same plan shape as the first."""
     _PLAN_CACHE.clear()
 
 
@@ -110,9 +88,6 @@ def query(name: str, oracle: str | None = None) -> Callable:
             if df is None or df.sparkSession is not spark:
                 df = fn(spark, sf_dir)
                 _PLAN_CACHE[key] = df
-            else:
-                for hook in _PLAN_CACHE_REARM_HOOKS:
-                    hook(spark)
             return df
 
         cached.__doc__ = fn.__doc__

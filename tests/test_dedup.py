@@ -242,12 +242,12 @@ def test_perceptual_cluster_resolve_vs_greedy(spark):
 
 
 def test_banded_cache_footprint_bounded_without_clearcache(spark):
-    """The one-slot cache contract, ENFORCED (r9 verdict ask #7):
-    three consecutive perceptual registry entries through one session
-    with NO clearCache() between them must leave at most one live
-    cached frame per operator slot — each banded_hamming_pairs /
-    simhash_pairs call evicts its predecessor, so a long-lived
-    embedder cannot leak one abandoned cached frame per call."""
+    """Bounded cache footprint without clearCache(): consecutive
+    perceptual registry entries through one session must not leave
+    cached frames behind. banded_hamming_pairs and simhash_pairs cache
+    nothing (one reused band shuffle feeds both join sides), so a
+    long-lived embedder cannot leak a cached frame per call; the
+    bound below keeps the historic allowance of two frames."""
     import time
 
     from sales_etl_spark.plans import QUERY_REGISTRY
@@ -269,62 +269,42 @@ def test_banded_cache_footprint_bounded_without_clearcache(spark):
         QUERY_REGISTRY[name].builder(spark, SF_DIR).write.format(
             "noop"
         ).mode("overwrite").save()
-    # async eviction (unpersist(blocking=False)): poll briefly
+    # GC-driven cleanup of earlier blocks is async: poll briefly
     deadline = time.time() + 15
     while time.time() < deadline and n_cached() > base + 2:
         time.sleep(0.5)
-    # at most one live frame per slot (banded_hamming + simhash) on
-    # top of the baseline (which can only shrink via GC meanwhile)
+    # at most two frames on top of the baseline (which can only
+    # shrink via GC meanwhile)
     assert n_cached() <= base + 2
     spark.catalog.clearCache()
 
 
-def test_banded_cache_rearms_after_clearcache_on_memo_hit(spark):
-    """Regression (r12): the plan memo in plans/registry.py skips the
-    builder body on a repeat call, so after a caller's clearCache()
-    nothing re-registered the banded frame's internal cache and the
-    memoized plan silently executed its raw lineage — the interpreted
-    HOF hash projection then re-evaluates inside pushed join
-    predicates per row (BENCH_r11 attempt-2: dedup_video_pairs 179 s
-    uncached vs 2.4 s cached). The memo-hit re-arm hook must restore
-    the registration: after build -> clearCache -> memo hit, the slot
-    frame must be cache-REGISTERED again (lazy — no job runs here)."""
-    from sales_etl_spark.operators.dedup import _CACHE_SLOTS
+@pytest.mark.parametrize(
+    "name",
+    ["dedup_phash_pairs", "dedup_audio_pairs", "dedup_video_pairs",
+     "video_dedup_pipeline_e2e"],
+)
+def test_banded_pairs_plan_needs_no_cache_after_clearcache(spark, name):
+    """No cliff after a cache eviction: a memoized banded-pair plan
+    rebuilt after clearCache() (a plan-memo hit) must neither read a
+    cache nor copy the interpreted higher-order fingerprint hash into
+    a pushed filter. An uncached plan that did so re-evaluated the
+    hash per row inside an inferred isnotnull() (dedup_video_pairs at
+    sf0.1 on local[4]: ~180 s uncached vs 0.65 s cached). Reads only
+    the optimized plan, so no Spark job runs."""
     from sales_etl_spark.plans import QUERY_REGISTRY
 
-    builder = QUERY_REGISTRY["dedup_video_pairs"].builder
-    builder(spark, SF_DIR)  # first call builds + registers the cache
-    spark.catalog.clearCache()  # drops the registration
-    builder(spark, SF_DIR)  # memo hit — must re-arm
-    frame = _CACHE_SLOTS[(id(spark), "banded_hamming")]
-    lvl = frame.storageLevel
-    assert lvl.useMemory or lvl.useDisk, (
-        "banded frame lost its cache registration across "
-        "clearCache() + plan-memo hit"
-    )
+    builder = QUERY_REGISTRY[name].builder
+    builder(spark, SF_DIR)
     spark.catalog.clearCache()
-
-
-def test_slot_cache_same_plan_repeat_keeps_registration(spark):
-    """Regression (r12): DataFrame.unpersist removes CacheManager
-    entries by CANONICALIZED PLAN, so _slot_cache evicting a same-plan
-    predecessor would evict the entry its own cache() call just
-    re-registered; same-semantics repeats must keep the live entry."""
-    from pyspark.sql import functions as F
-
-    from sales_etl_spark.operators.dedup import _slot_cache
-
-    def build():
-        return spark.range(100).select(
-            F.col("id"), (F.col("id") % 7).alias("k")
-        )
-
-    a = _slot_cache(build(), "test_same_plan_slot")
-    b = _slot_cache(build(), "test_same_plan_slot")
-    lvl = b.storageLevel
-    assert lvl.useMemory or lvl.useDisk
-    b.unpersist(blocking=False)
-    spark.catalog.clearCache()
+    df = builder(spark, SF_DIR)  # memo hit
+    plan = df.select("*")._jdf.queryExecution().optimizedPlan().toString()
+    assert "InMemoryRelation" not in plan
+    hof_filters = [
+        line for line in plan.splitlines()
+        if "Filter" in line and "lambdafunction" in line
+    ]
+    assert not hof_filters, hof_filters
 
 
 def test_incremental_exact_dedup_planted(spark):
@@ -629,36 +609,3 @@ def test_substring_span_catches_embedded_literal_runs(spark):
     assert n_shared >= 70 and est_span == n_shared + 63
     assert (1, 3) in got  # repeated filler is itself a literal run
     assert not any(4 in p for p in got)
-
-
-def test_slot_cache_rearm_is_silent_only_for_stopped_sessions(caplog):
-    """A slot frame whose session was stopped fails its re-arm quietly;
-    the same failure on a live session is logged, since the frame may
-    then run uncached."""
-    import logging
-    from types import SimpleNamespace
-
-    from sales_etl_spark.operators import dedup
-
-    class Frame:
-        def __init__(self, jsc):
-            self.sparkSession = SimpleNamespace(
-                sparkContext=SimpleNamespace(_jsc=jsc)
-            )
-
-        @property
-        def storageLevel(self):
-            raise RuntimeError("storage level unavailable")
-
-    spark = object()
-    keys = [(id(spark), "live"), (id(spark), "stopped")]
-    dedup._CACHE_SLOTS[keys[0]] = Frame(jsc=object())
-    dedup._CACHE_SLOTS[keys[1]] = Frame(jsc=None)
-    try:
-        with caplog.at_level(logging.WARNING, logger=dedup.__name__):
-            dedup._rearm_slot_caches(spark)
-    finally:
-        for k in keys:
-            dedup._CACHE_SLOTS.pop(k)
-    assert len(caplog.records) == 1
-    assert "re-arm" in caplog.records[0].getMessage()
