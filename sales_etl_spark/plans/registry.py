@@ -28,9 +28,17 @@ between a distributed Spark plan and single-threaded DuckDB):
 
 from __future__ import annotations
 
+import atexit
+import functools
+import os
+import shutil
+import tempfile
+import zipfile
 from collections.abc import Callable
 from dataclasses import dataclass
+from pathlib import Path
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -67,6 +75,40 @@ def clear_plan_cache() -> None:
     _PLAN_CACHE.clear()
 
 
+#: Applications whose Python workers have been sent the package.
+_SHIPPED_TO: set[str] = set()
+_PACKAGE = Path(__file__).resolve().parent.parent
+_ZIP_NAME = f"{_PACKAGE.name}.zip"
+
+
+@functools.cache
+def _package_zip() -> str:
+    """The package's ``.py`` files, zipped once per process into a
+    temporary directory that is removed at exit."""
+    tmp = tempfile.mkdtemp(prefix=f"{_PACKAGE.name}-")
+    atexit.register(shutil.rmtree, tmp, True)
+    path = os.path.join(tmp, _ZIP_NAME)
+    with zipfile.ZipFile(path, "w") as z:
+        for f in sorted(_PACKAGE.rglob("*.py")):
+            z.write(f, f.relative_to(_PACKAGE.parent))
+    return path
+
+
+def _ship_package(sc: SparkContext, app_id: str) -> None:
+    """Put the package on the Python workers' path once per application,
+    before a builder creates any Python function (each one records the
+    shipped files when it is created). Workers otherwise import the
+    package from their working directory, which holds it only when the
+    caller started in the repo. A zip of that name the application
+    already lists (a caller's ``--py-files``, or another copy of this
+    module in the same process) is left as it is."""
+    if app_id in _SHIPPED_TO:
+        return
+    if not any(f.rsplit("/", 1)[-1] == _ZIP_NAME for f in sc.listFiles):
+        sc.addPyFile(_package_zip())
+    _SHIPPED_TO.add(app_id)
+
+
 def query(name: str, oracle: str | None = None) -> Callable:
     """Register a named query. ``oracle`` is the DuckDB SQL twin run on
     the same parquet tables (views: region nation customer supplier
@@ -77,13 +119,9 @@ def query(name: str, oracle: str | None = None) -> Callable:
             raise ValueError(f"duplicate query name: {name}")
 
         def cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-            import os
-
-            key = (
-                spark.sparkContext.applicationId,
-                name,
-                os.path.abspath(sf_dir),
-            )
+            app_id = spark.sparkContext.applicationId
+            _ship_package(spark.sparkContext, app_id)
+            key = (app_id, name, os.path.abspath(sf_dir))
             df = _PLAN_CACHE.get(key)
             if df is None or df.sparkSession is not spark:
                 df = fn(spark, sf_dir)

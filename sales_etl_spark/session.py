@@ -10,9 +10,12 @@ harness, or a production spark-submit).
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 #: Confs that are safe (and required) to set on a live session.
 _RUNTIME_CONFS = {
@@ -65,13 +68,13 @@ def pin_semantics(spark: SparkSession) -> SparkSession:
     for key, value in _RUNTIME_CONFS.items():
         try:
             spark.conf.set(key, value)
-        except Exception:
+        except Exception as exc:
             # A locked-down session (static conf) — semantics then
             # follow the caller. Relational paths use try_*-safe forms,
             # but the minhash/simhash signature operators REQUIRE
             # non-ANSI 64-bit wrap-around and assert it themselves
             # (operators/dedup.py:_require_wraparound).
-            pass
+            log.warning("pin_semantics: cannot set %s=%s: %r", key, value, exc)
     return spark
 
 

@@ -1,0 +1,109 @@
+"""tools/query_profile.py: cold build jobs, the plan summary, and the
+``--ab`` swap between two source trees."""
+
+from __future__ import annotations
+
+import itertools
+import json
+import os
+import re
+import shutil
+import subprocess
+import sys
+from pathlib import Path
+
+import pytest
+
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
+
+from conftest import SF_SMOKE  # noqa: E402
+from perfbench.spark_stats import SparkStats  # noqa: E402
+from sales_etl_spark.plans import QUERY_REGISTRY  # noqa: E402
+from sales_etl_spark.plans.registry import clear_plan_cache  # noqa: E402
+from test_plans import _formatted  # noqa: E402
+from tools.query_profile import profile, warm_up  # noqa: E402
+
+SF = SF_SMOKE
+
+
+@pytest.fixture(scope="module")
+def run(spark):
+    warm_up(spark, SF)
+    stats = SparkStats(spark)
+    calls = itertools.count()
+
+    def run(name):
+        record, _ = profile(spark, stats, QUERY_REGISTRY, clear_plan_cache,
+                            name, SF, runs=1, group=f"test{next(calls)}:")
+        return record
+
+    yield run
+    spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    spark.sparkContext.setLocalProperty("spark.job.description", None)
+
+
+def test_build_jobs_count_jobs_run_while_building(run):
+    bpe = run("text_bpe_train")
+    assert bpe["build_jobs"] > 0, bpe
+    # the first load of lineitem and orders in the application runs one
+    # schema-read job each; the star schema keeps them for later builds
+    assert run("agg_sales_summary")["build_jobs"] <= 2
+    summary = run("agg_sales_summary")
+    assert summary["build_jobs"] == 0, summary
+    assert summary["stages"]["exec"]["jobs"] >= 1, summary
+    assert summary["memo_hit"] is True
+    assert summary["cold_s"] >= summary["build_s"] + summary["exec_s"]
+
+
+@pytest.mark.parametrize("name", ["agg_sales_summary", "dedup_ngram_jaccard"])
+def test_plan_summary_counts_exchanges_like_the_plan_tests(spark, run, name):
+    got = run(name)["plan"]
+    clear_plan_cache()
+    spark.catalog.clearCache()
+    body = _formatted(QUERY_REGISTRY[name].builder(spark, SF)).split(
+        "== Physical Plan ==")[1]
+    want = len(re.findall(r"\(\d+\) Exchange", body))
+    assert want > 0
+    assert got["exchanges"] == want, got
+    assert got["scan_cols"] and all(n > 0 for n in got["scan_cols"]), got
+
+
+def test_ab_swap_imports_each_side_from_its_own_tree(tmp_path):
+    """In a fresh interpreter, so this session's modules stay as they
+    are: after every switch the registry's builders, its plan memo and
+    the modules builders import lazily all come from the active tree;
+    then one ``--ab`` run reports both sides."""
+    pin = tmp_path / "pin"
+    shutil.copytree(REPO / "sales_etl_spark", pin / "sales_etl_spark",
+                    ignore=shutil.ignore_patterns("__pycache__"))
+    script = f"""
+import inspect, sys
+from pathlib import Path
+sys.path.insert(0, {str(REPO)!r})
+from tools.query_profile import Trees, main
+roots = {{"head": Path({str(REPO)!r}), "pin": Path({str(pin)!r})}}
+trees = Trees(roots)
+for side in ("pin", "head", "pin", "head"):
+    registry, clear = trees.activate(side)
+    pkg = roots[side] / "sales_etl_spark"
+    files = [
+        inspect.getfile(registry["text_bpe_train"].builder.__wrapped__),
+        inspect.getfile(clear),
+        sys.modules["sales_etl_spark.operators.skew"].__file__,
+    ]
+    for f in files:
+        assert Path(f).is_relative_to(pkg), (side, f)
+main(["--sf", {SF!r}, "--ab", {str(pin)!r}, "--runs", "1",
+      "agg_sales_summary"])
+"""
+    env = {**os.environ, "SPARK_GRAFT_CPUS": "2",
+           "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    proc = subprocess.run([sys.executable, "-c", script], cwd=REPO, env=env,
+                          capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    [line] = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
+    out = json.loads(line)
+    assert out["head"]["plan"] == out["pin"]["plan"]
+    assert out["head"]["build_jobs"] == out["pin"]["build_jobs"]
+    assert set(out["ratio"]) >= {"cold_s", "warm_median_s"}

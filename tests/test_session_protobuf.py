@@ -60,3 +60,55 @@ def test_local_driver_memory_is_half_of_available_within_bounds(monkeypatch):
                            (1000, "1024m")):
         monkeypatch.setattr(S, "available_memory_mb", lambda m=avail_mb: m)
         assert S.local_driver_memory() == heap
+
+
+def test_pin_semantics_logs_each_conf_it_cannot_set(spark, monkeypatch, caplog):
+    """A conf the session refuses is reported with its key and the
+    error, and the other confs are still pinned."""
+    seen = []
+
+    def refuse_ansi(key, value):
+        seen.append(key)
+        if key == "spark.sql.ansi.enabled":
+            raise RuntimeError("static conf")
+
+    monkeypatch.setattr(spark.conf, "set", refuse_ansi)
+    with caplog.at_level("WARNING", logger=S.__name__):
+        S.pin_semantics(spark)
+    assert seen == list(S._RUNTIME_CONFS)
+    [record] = caplog.records
+    assert "spark.sql.ansi.enabled" in record.getMessage()
+    assert "static conf" in record.getMessage()
+
+
+def test_python_workers_import_the_package_from_any_working_directory(
+    tmp_path,
+):
+    """A vanilla session started outside the repo runs a Python-kernel
+    query through ``__spark_entry__``: the workers' working directory
+    does not hold the package, so the builder must ship it."""
+    import subprocess
+
+    repo = Path(__file__).resolve().parent.parent
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {str(repo)!r})\n"
+        "from pyspark.sql import SparkSession\n"
+        "spark = (SparkSession.builder.master('local[2]')\n"
+        "         .config('spark.ui.enabled', 'false').getOrCreate())\n"
+        "import __spark_entry__ as E\n"
+        "df = E.queries()['media_png_decode'](spark, E.SMOKE_SF_DIR)\n"
+        "print('rows', len(df.collect()))\n"
+        "spark.stop()\n"
+    )
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in env.get("PYTHONPATH", "").split(os.pathsep)
+        if p and Path(p).resolve() != repo
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert "rows " in proc.stdout
