@@ -1,5 +1,6 @@
 """Distributed BPE tokenizer training — the tokenizer-learning step
-of an LLM data pipeline, Spark-first.
+of an LLM data pipeline, split into a driver-side fit and a lazy,
+Spark-side apply.
 
 Byte-pair encoding (Sennrich et al. 2016, public): start from the
 character segmentation of every word, then repeatedly merge the
@@ -7,27 +8,28 @@ most-frequent adjacent symbol pair (corpus-frequency weighted) into a
 new symbol. The merge TABLE is the trained tokenizer; applying the
 merges in order segments any text.
 
-Spark-first shape — the Lloyd/bounded-driver-state pattern the
-embedding tier already uses (operators/similarity.py, kmeans):
-
-- The corpus collapses ONCE to the (word, freq) vocabulary — the only
-  corpus-wide exchange. Everything after runs on vocabulary grain,
-  which is orders of magnitude smaller than the corpus at 100 TB (the
-  classic BPE-training trick).
-- Each merge round is: one vocabulary-grain pair-count aggregation
-  (adjacent symbol pairs from in-row array slices — map-side partial
-  aggregation applies), ONE 1-row argmax collect (deterministic
-  tiebreak: count DESC, then lexicographic pair), and a map-only
-  in-row fold that applies the merge to every word's symbol array.
-  Driver state is the merge table — ``n_merges`` rows, bounded.
+- **Fit.** The corpus collapses ONCE to the (word, freq) vocabulary —
+  the only corpus-wide exchange — and ONE action collects it. The
+  sequential argmax-and-merge loop then runs in plain Python on the
+  driver: pair counts weighted by word frequency, a total tiebreak
+  (count DESC, then ``a`` ASC, then ``b`` ASC; Python ``str`` order is
+  code-point order, which is the UTF-8 byte order Spark sorts by), and
+  an early stop once every word is one symbol. A build therefore runs
+  the same few Spark jobs for any ``n_merges``. Driver state is the
+  vocabulary, as in every single-node BPE trainer; under Heaps' law it
+  grows roughly with the square root of the corpus token count.
+- **Apply.** The returned vocabulary is the same ``word_vocabulary``
+  plan with each learned merge chained as a map-only in-row fold
+  (``_merge_fold_sql``), so nothing is cached and the plan stays lazy.
 - Merge application is the standard single-pass left-to-right
   non-overlapping rule (re.sub semantics in the reference
-  implementation). The in-row fold reproduces it exactly: a merge
-  fires when the accumulator's LAST symbol is ``a`` and the incoming
-  symbol is ``b`` — after a fire the tail becomes ``ab`` (never equal
-  to ``a``, since ``b`` is non-empty), so a run "a a a a" merges at
-  positions 1 and 3 exactly like the reference
-  (tests/test_corpus_ops.py pins the run semantics).
+  implementation). The in-row fold and the driver's ``_merge_pass``
+  state it the same way: a merge fires when the accumulator's LAST
+  symbol is ``a`` and the incoming symbol is ``b`` — after a fire the
+  tail becomes ``ab`` (never equal to ``a``, since ``b`` is
+  non-empty), so a run "a a a a" merges at positions 1 and 3 exactly
+  like the reference (tests/test_corpus_ops.py pins the run semantics
+  and that the fit and the apply agree).
 
 Cross-engine exactness: counts are exact integers, the tiebreak is
 total, and symbols are ``\\w`` characters (no quoting hazards), so the
@@ -41,6 +43,8 @@ segmentation instead of the fixed BPE_RE regex heuristic).
 """
 
 from __future__ import annotations
+
+from collections import Counter
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -93,6 +97,40 @@ def _merge_fold_sql(a: str, b: str) -> str:
     )
 
 
+def _merge_pass(s: list[str], a: str, b: str) -> list[str]:
+    """Driver twin of ``_merge_fold_sql``: one left-to-right pass that
+    merges every non-overlapping ``a b`` into ``ab``."""
+    out: list[str] = []
+    for x in s:
+        if out and out[-1] == a and x == b:
+            out[-1] = a + b
+        else:
+            out.append(x)
+    return out
+
+
+def _fit_merges(
+    vocab: list[tuple[str, int]], n_merges: int
+) -> tuple[list[tuple], dict[str, list[str]]]:
+    """The sequential BPE loop over a collected (word, freq)
+    vocabulary. Returns the merge table [(merge_idx, sym_a, sym_b,
+    merged, pair_count), ...] and every word's final segmentation."""
+    freq = dict(vocab)
+    segs = {w: list(w) for w in freq}
+    merges: list[tuple] = []
+    for k in range(n_merges):
+        counts: Counter[tuple[str, str]] = Counter()
+        for w, s in segs.items():
+            for pair in zip(s, s[1:]):
+                counts[pair] += freq[w]
+        if not counts:
+            break  # corpus exhausted (every word one symbol)
+        (a, b), cnt = min(counts.items(), key=lambda pc: (-pc[1], pc[0]))
+        merges.append((k, a, b, a + b, cnt))
+        segs = {w: _merge_pass(s, a, b) for w, s in segs.items()}
+    return merges, segs
+
+
 def bpe_train(
     docs: DataFrame,
     text_col: str = "text",
@@ -100,69 +138,20 @@ def bpe_train(
 ) -> tuple[list[tuple], DataFrame]:
     """Train ``n_merges`` BPE merge rules over the corpus. Returns
     ``(merges, final_vocab)``: ``merges`` is the learned rule table
-    [(merge_idx, sym_a, sym_b, merged, pair_count), ...] (bounded
-    driver state), ``final_vocab`` the (w, freq, s) vocabulary
-    re-segmented under every learned rule."""
-    vocab = word_vocabulary(docs, text_col).cache()
-    merges: list[tuple] = []
-    live = [vocab]  # every frame still cached; drained on error
-    # r11 optimization-round cache hand-off (guide §1.2): the old loop
-    # ran an explicit nxt.count() materialization job EVERY round so
-    # the parent cache could be dropped immediately — n extra jobs
-    # (~2 stages each) whose only product was the cache write. The
-    # NEXT round's argmax job materializes the child anyway (its pair
-    # scan reads every partition), so the parent's unpersist is simply
-    # DEFERRED one round: at most TWO vocabulary-grain frames are ever
-    # cached (same peak as the old swap, which also held both during
-    # its count), and only the FINAL frame needs an explicit
-    # materialization before its parent drops. Measured at sf0.1:
-    # text_bpe_train 45 → 31 stages / 228 → 165 tasks,
-    # tokenize_pipeline_e2e 52 → 38 stages, identical results.
-    prev: DataFrame | None = None
-    try:
-        for k in range(n_merges):
-            pairs = vocab.filter(F.size("s") >= 2).select(
-                "freq",
-                F.explode(
-                    F.expr(
-                        "transform(sequence(1, size(s) - 1), i -> "
-                        "struct(element_at(s, i) AS a, "
-                        "element_at(s, i + 1) AS b))"
-                    )
-                ).alias("p"),
-            ).select("freq", "p.a", "p.b")
-            top = (
-                pairs.groupBy("a", "b")
-                .agg(F.sum("freq").alias("cnt"))
-                .orderBy(F.desc("cnt"), F.asc("a"), F.asc("b"))
-                .limit(1)
-                .collect()
-            )
-            # this collect just scanned every cached partition of
-            # ``vocab`` — the grandparent is now safe to drop
-            if prev is not None:
-                prev.unpersist()
-                live.remove(prev)
-                prev = None
-            if not top:
-                break  # corpus exhausted (every word one symbol)
-            a, b = top[0]["a"], top[0]["b"]
-            merges.append((k, a, b, a + b, int(top[0]["cnt"])))
-            nxt = vocab.select(
-                "w", "freq", F.expr(_merge_fold_sql(a, b)).alias("s")
-            ).cache()
-            live.append(nxt)
-            prev = vocab
-            vocab = nxt
-        if prev is not None:
-            vocab.count()  # materialize the FINAL frame once
-            prev.unpersist()
-            live.remove(prev)
-        return merges, vocab
-    except Exception:
-        for df in live:  # drain every still-cached frame
-            df.unpersist()
-        raise
+    [(merge_idx, sym_a, sym_b, merged, pair_count), ...], fitted on
+    the driver from one collect of the (word, freq) vocabulary;
+    ``final_vocab`` is the lazy (w, freq, s) vocabulary re-segmented
+    under every learned rule."""
+    vocab = word_vocabulary(docs, text_col)
+    merges, _ = _fit_merges(
+        [(r["w"], r["freq"]) for r in vocab.select("w", "freq").collect()],
+        n_merges,
+    )
+    for _, a, b, _, _ in merges:
+        vocab = vocab.select(
+            "w", "freq", F.expr(_merge_fold_sql(a, b)).alias("s")
+        )
+    return merges, vocab
 
 
 def bpe_merge_table(
@@ -170,8 +159,7 @@ def bpe_merge_table(
 ) -> DataFrame:
     """The trained merge table as a DataFrame (the tokenizer
     artifact a pipeline persists)."""
-    merges, vocab = bpe_train(docs, text_col, n_merges)
-    vocab.unpersist()
+    merges, _ = bpe_train(docs, text_col, n_merges)
     return docs.sparkSession.createDataFrame(
         merges,
         "merge_idx int, sym_a string, sym_b string, "
@@ -187,19 +175,13 @@ def bpe_segmented_vocab(
     space-separated string — the apply half of the tokenizer, stated
     at vocabulary grain (token counts per document follow by joining
     words back to docs)."""
-    merges, vocab = bpe_train(docs, text_col, n_merges)
-    out = vocab.select(
+    _, vocab = bpe_train(docs, text_col, n_merges)
+    return vocab.select(
         "w",
         "freq",
         F.size("s").cast("int").alias("n_syms"),
         F.array_join("s", " ").alias("seg"),
     )
-    # release the training cache: the returned plan recomputes its
-    # (one corpus groupBy + N map-only folds) lineage when executed —
-    # leak-free beats saving one vocabulary-sized scan, and repeated
-    # builds in one session no longer pin dead frames
-    vocab.unpersist()
-    return out
 
 
 def bpe_token_counts(
@@ -219,9 +201,8 @@ def bpe_token_counts(
     per-doc rollup is the only corpus-grain exchange."""
     from sales_etl_spark.operators.skew import spread_narrow_input
 
-    merges, vocab = bpe_train(docs, text_col, n_merges)
+    _, vocab = bpe_train(docs, text_col, n_merges)
     sizes = vocab.select("w", F.size("s").cast("long").alias("n_syms"))
-    vocab.unpersist()  # same leak-free contract as bpe_segmented_vocab
     words = spread_narrow_input(docs.select(id_col, text_col)).select(
         id_col,
         F.explode(tokens(F.lower(F.col(text_col)), WORD_RE)).alias("w"),

@@ -2964,10 +2964,11 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-frequency-weighted adjacent symbol pairs over the
     vocabulary, picks the argmax with a total tiebreak, and re-segments
     every word under the new rule). The merge table IS the tokenizer
-    artifact an LLM data pipeline persists. Spark-first shape in
-    operators/tokenize.py: the corpus collapses once to (word, freq);
-    every round is vocabulary-grain (one bounded exchange + a 1-row
-    collect + a map-only in-row fold); driver state is 8 rows. The
+    artifact an LLM data pipeline persists. Fit/apply shape in
+    operators/tokenize.py: the corpus collapses once to (word, freq),
+    ONE collect brings that vocabulary to the driver, and the merge
+    rounds run there in plain Python, so the build runs the same few
+    jobs for any merge count; driver state is the vocabulary. The
     oracle unrolls the same rounds as recursive DuckDB CTEs — a wrong
     tiebreak, a fold that mishandles same-symbol runs, or an off-by-one
     in the pair window flips the hash."""
@@ -2991,9 +2992,11 @@ def text_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     under the 8 trained rules, with its corpus frequency and symbol
     count — the tokenize half of the tokenizer (per-document token
     counts follow by joining words back to documents). Shares the
-    training pipeline with text_bpe_train; the oracle's final CTE is
-    the fully-merged vocabulary, so every learned rule's application to
-    every word (including same-symbol runs) is on the hash."""
+    driver-side fit with text_bpe_train; the plan is the vocabulary
+    aggregation with the 8 learned rules chained as map-only in-row
+    folds, nothing cached. The oracle's final CTE is the fully-merged
+    vocabulary, so every learned rule's application to every word
+    (including same-symbol runs) is on the hash."""
     from sales_etl_spark.operators.tokenize import bpe_segmented_vocab
 
     st = _star(spark, sf_dir)
@@ -3017,12 +3020,13 @@ def text_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document token counts under the LEARNED BPE segmentation —
     the production token-budget metric (mix_token_budget's regex
-    heuristic, upgraded to a trained tokenizer). The doc->word stream
-    joins the segmented vocabulary as a BROADCAST (the vocab is the
-    small side at any corpus scale), so the corpus never shuffles for
-    the lookup; the per-doc rollup is the only corpus-grain exchange.
-    The oracle re-derives the same counts from the unrolled-rounds
-    pipeline's final vocabulary."""
+    heuristic, upgraded to a trained tokenizer). The merges are
+    fitted on the driver from one vocabulary collect; the doc->word
+    stream joins the lazily segmented vocabulary as a BROADCAST (the
+    vocab is the small side at any corpus scale), so the corpus never
+    shuffles for the lookup; the per-doc rollup is the only
+    corpus-grain exchange. The oracle re-derives the same counts from
+    the unrolled-rounds pipeline's final vocabulary."""
     from sales_etl_spark.operators.tokenize import bpe_token_counts
 
     st = _star(spark, sf_dir)
@@ -3093,10 +3097,11 @@ def tokenize_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     first/last example span. The oracle chains the same three stages
     behind the unrolled-rounds BPE pipeline, so a drift anywhere —
     a merge rule, a budget boundary doc, a pack offset — flips the
-    hash. Scale shape: the chain adds ONE doc-grain equi-join
-    (counts x source) and two stratum/shard window sums to the
-    tokenizer's vocabulary-grain rounds; nothing quadratic, nothing
-    driver-sized beyond the 8-row merge table."""
+    hash. Scale shape: the tokenizer's build is one vocabulary
+    collect plus the merge rounds on the driver; the chain adds ONE
+    doc-grain equi-join (counts x source) and two stratum/shard window
+    sums to the lazily segmented vocabulary; nothing quadratic, and
+    no driver state beyond the (word, freq) vocabulary."""
     from sales_etl_spark.operators import sampling
     from sales_etl_spark.operators.tokenize import bpe_token_counts
 

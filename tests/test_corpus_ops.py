@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
+
 from sales_etl_spark.plans import QUERY_REGISTRY
 
 SF = "/root/testdata/sf0.001"
@@ -101,11 +103,96 @@ def test_bpe_train_merge_table_properties(spark):
         [("the thermos there",), ("the thin theory",), ("banana bandana",)],
         "text string",
     )
-    merges, vocab = bpe_train(docs, "text", n_merges=3)
-    vocab.unpersist()
+    merges, _ = bpe_train(docs, "text", n_merges=3)
     assert [m[0] for m in merges] == [0, 1, 2]
     # 'th' leads: t-h is adjacent in the/thermos/there/thin/theory
     assert (merges[0][1], merges[0][2]) == ("t", "h")
     assert merges[0][3] == "th" and merges[0][4] >= 5
     # second round merges 'th'+'e' (the created symbol participates)
     assert (merges[1][1], merges[1][2]) == ("th", "e")
+
+
+def test_bpe_train_build_jobs_do_not_depend_on_n_merges(spark):
+    """The merges are fitted on the driver from ONE collect of the
+    (word, freq) vocabulary, so building the tokenizer starts the same
+    Spark jobs for one merge as for eight — no job per merge round."""
+    import uuid
+
+    from sales_etl_spark.operators.tokenize import bpe_train
+
+    sc = spark.sparkContext
+    docs = spark.createDataFrame(
+        [("the thermos there",), ("the thin theory",), ("banana bandana",)],
+        "text string",
+    )
+    jobs = {}
+    for n in (1, 8):
+        group = f"bpe-fit-{n}-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            merges, _ = bpe_train(docs, "text", n_merges=n)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert len(merges) == n
+        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 1 <= jobs[1] == jobs[8], jobs
+
+
+@pytest.mark.parametrize(
+    "texts, merges, segs",
+    [
+        pytest.param(
+            # count ties: a ASC first, then b ASC; weights are word freqs
+            ["cd ab ad bc", "ac ab cd ad bc"],
+            [
+                ("a", "b", 2), ("a", "d", 2), ("b", "c", 2), ("c", "d", 2),
+                ("a", "c", 1),
+            ],
+            {"ab": ["ab"], "ad": ["ad"], "bc": ["bc"], "cd": ["cd"],
+             "ac": ["ac"]},
+            id="tiebreak",
+        ),
+        pytest.param(
+            # same-symbol runs merge left to right, non-overlapping:
+            # aaaaa -> aa aa a -> aa aaa -> aaaaa
+            ["aaaa aaa aaaaa"],
+            [("a", "a", 9), ("aa", "a", 2), ("aa", "aa", 1), ("aa", "aaa", 1)],
+            {"aaa": ["aaa"], "aaaa": ["aaaa"], "aaaaa": ["aaaaa"]},
+            id="runs",
+        ),
+        pytest.param(
+            # 'abc' reached as ab+c (tie: (a,b) < (b,c)) ...
+            ["abc"],
+            [("a", "b", 1), ("ab", "c", 1)],
+            {"abc": ["abc"]},
+            id="path-ab-c",
+        ),
+        pytest.param(
+            # ... and as a+bc once 'bc' is the heavier pair
+            ["abc bc"],
+            [("b", "c", 2), ("a", "bc", 1)],
+            {"abc": ["abc"], "bc": ["bc"]},
+            id="path-a-bc",
+        ),
+        pytest.param(
+            # nothing to merge: the loop stops before its first round
+            ["a b a"], [], {"a": ["a"], "b": ["b"]}, id="exhausted",
+        ),
+        pytest.param(["... !?"], [], {}, id="empty"),
+    ],
+)
+def test_bpe_fit_and_lazy_apply_agree(spark, texts, merges, segs):
+    """Adversarial corpora (each stops before its 8 merges): the
+    driver-side fit learns the expected table, and the lazily applied
+    in-row folds segment every word exactly as the driver loop did."""
+    from sales_etl_spark.operators.tokenize import _fit_merges, bpe_train
+
+    docs = spark.createDataFrame([(t,) for t in texts], "text string")
+    got, vocab = bpe_train(docs, "text", n_merges=8)
+    assert got == [
+        (k, a, b, a + b, cnt) for k, (a, b, cnt) in enumerate(merges)
+    ]
+    rows = vocab.collect()
+    _, driver_segs = _fit_merges([(r.w, r.freq) for r in rows], 8)
+    assert {r.w: list(r.s) for r in rows} == driver_segs == segs

@@ -1290,8 +1290,7 @@ def test_stream_bpe_segmentation_equals_batch(spark, tmp_path):
         "overwrite"
     ).parquet(path)
 
-    merges, vocab = bpe_train(spark.read.parquet(path), "text", 4)
-    vocab.unpersist()
+    merges, _ = bpe_train(spark.read.parquet(path), "text", 4)
 
     def segment(df):
         words = df.select(
