@@ -1,5 +1,5 @@
 """Distributed BPE tokenizer training — the tokenizer-learning step
-of an LLM data pipeline, split into a driver-side fit and a lazy,
+of an LLM data pipeline, split into a driver-side fit and a
 Spark-side apply.
 
 Byte-pair encoding (Sennrich et al. 2016, public): start from the
@@ -18,9 +18,13 @@ merges in order segments any text.
   the same few Spark jobs for any ``n_merges``. Driver state is the
   vocabulary, as in every single-node BPE trainer; under Heaps' law it
   grows roughly with the square root of the corpus token count.
-- **Apply.** The returned vocabulary is the same ``word_vocabulary``
-  plan with each learned merge chained as a map-only in-row fold
-  (``_merge_fold_sql``), so nothing is cached and the plan stays lazy.
+- **Apply.** The fit already holds every vocabulary word's final
+  segmentation, so the returned (w, freq, s) vocabulary is that driver
+  state handed back to Spark as a local relation (``driver_table``):
+  no second corpus pass, no Python worker when it runs, and the same
+  build-time snapshot as the merge table. ``_merge_fold_sql`` states
+  one merge as a map-only in-row fold, the stateless apply a stream
+  of new documents uses once the table is trained.
 - Merge application is the standard single-pass left-to-right
   non-overlapping rule (re.sub semantics in the reference
   implementation). The in-row fold and the driver's ``_merge_pass``
@@ -29,7 +33,7 @@ merges in order segments any text.
   tail becomes ``ab`` (never equal to ``a``, since ``b`` is
   non-empty), so a run "a a a a" merges at positions 1 and 3 exactly
   like the reference (tests/test_corpus_ops.py pins the run semantics
-  and that the fit and the apply agree).
+  and that the driver's segmentation equals the chained folds' output).
 
 Cross-engine exactness: counts are exact integers, the tiebreak is
 total, and symbols are ``\\w`` characters (no quoting hazards), so the
@@ -50,6 +54,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sales_etl_spark.functions.text import WORD_RE, tokens
+from sales_etl_spark.sources.local import driver_table
 
 
 def word_vocabulary(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -140,18 +145,18 @@ def bpe_train(
     ``(merges, final_vocab)``: ``merges`` is the learned rule table
     [(merge_idx, sym_a, sym_b, merged, pair_count), ...], fitted on
     the driver from one collect of the (word, freq) vocabulary;
-    ``final_vocab`` is the lazy (w, freq, s) vocabulary re-segmented
-    under every learned rule."""
-    vocab = word_vocabulary(docs, text_col)
-    merges, _ = _fit_merges(
-        [(r["w"], r["freq"]) for r in vocab.select("w", "freq").collect()],
-        n_merges,
+    ``final_vocab`` is that vocabulary with every word's segmentation
+    under the learned rules, (w, freq, s), as a local relation."""
+    vocab = [
+        (r["w"], r["freq"])
+        for r in word_vocabulary(docs, text_col).select("w", "freq").collect()
+    ]
+    merges, segs = _fit_merges(vocab, n_merges)
+    return merges, driver_table(
+        docs.sparkSession,
+        [(w, f, segs[w]) for w, f in vocab],
+        "w string, freq long, s array<string>",
     )
-    for _, a, b, _, _ in merges:
-        vocab = vocab.select(
-            "w", "freq", F.expr(_merge_fold_sql(a, b)).alias("s")
-        )
-    return merges, vocab
 
 
 def bpe_merge_table(
@@ -160,7 +165,8 @@ def bpe_merge_table(
     """The trained merge table as a DataFrame (the tokenizer
     artifact a pipeline persists)."""
     merges, _ = bpe_train(docs, text_col, n_merges)
-    return docs.sparkSession.createDataFrame(
+    return driver_table(
+        docs.sparkSession,
         merges,
         "merge_idx int, sym_a string, sym_b string, "
         "merged string, pair_count long",

@@ -43,6 +43,7 @@ from pyspark.sql.window import Window
 from sales_etl_spark.functions import scalars, vectors
 from sales_etl_spark.plans.registry import query
 from sales_etl_spark.session import pin_semantics
+from sales_etl_spark.sources.local import driver_table
 from sales_etl_spark.sources.star import load_star
 
 
@@ -2125,7 +2126,8 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
     import math
 
-    return spark.createDataFrame(
+    return driver_table(
+        spark,
         [
             (rank, vid, math.sqrt(float(d) / 1e12))
             for rank, vid, d in chosen
@@ -2253,7 +2255,8 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
             else:
                 nxt[i] += pi[i]
         pi = nxt
-    return spark.createDataFrame(
+    return driver_table(
+        spark,
         [(t, pi[t], pi[t] / 1e6) for t in types],
         "event_type string, stationary_micro long, stationary double",
     )

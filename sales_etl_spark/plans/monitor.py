@@ -44,6 +44,7 @@ from pyspark.sql.window import Window
 from sales_etl_spark.operators.reconcile import snapshot_diff
 from sales_etl_spark.plans.registry import query
 from sales_etl_spark.session import pin_semantics
+from sales_etl_spark.sources.local import driver_table
 from sales_etl_spark.sources.star import load_star
 
 
@@ -5372,7 +5373,8 @@ def agg_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
         new_lvl = _half(x + lvl + tr)
         tr = _half(new_lvl - lvl + tr)
         lvl = new_lvl
-    return spark.createDataFrame(
+    return driver_table(
+        spark,
         [
             (
                 h,
@@ -5571,7 +5573,8 @@ def agg_holt_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         naive_ae += abs(naive - actual)
         holt_e += f - actual
     n_test = len(test)
-    return spark.createDataFrame(
+    return driver_table(
+        spark,
         [
             (
                 len(train),

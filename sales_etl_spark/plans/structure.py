@@ -49,6 +49,7 @@ from sales_etl_spark.operators.windows import (
 )
 from sales_etl_spark.plans.registry import query
 from sales_etl_spark.session import pin_semantics
+from sales_etl_spark.sources.local import driver_table
 from sales_etl_spark.sources.star import load_star
 
 
@@ -1847,7 +1848,8 @@ def emb_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     root = math.sqrt(float(n2))
-    return spark.createDataFrame(
+    return driver_table(
+        spark,
         [(i + 1, v[i], float(v[i]) / root) for i in range(d)],
         "dim int, v_scaled long, loading double",
     )
@@ -2992,11 +2994,12 @@ def text_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     under the 8 trained rules, with its corpus frequency and symbol
     count — the tokenize half of the tokenizer (per-document token
     counts follow by joining words back to documents). Shares the
-    driver-side fit with text_bpe_train; the plan is the vocabulary
-    aggregation with the 8 learned rules chained as map-only in-row
-    folds, nothing cached. The oracle's final CTE is the fully-merged
-    vocabulary, so every learned rule's application to every word
-    (including same-symbol runs) is on the hash."""
+    driver-side fit with text_bpe_train, which already segments every
+    word, so the plan is one LocalTableScan of that fitted vocabulary:
+    no second corpus pass and no Python worker when it runs. The
+    oracle's final CTE is the fully-merged vocabulary, so every
+    learned rule's application to every word (including same-symbol
+    runs) is on the hash."""
     from sales_etl_spark.operators.tokenize import bpe_segmented_vocab
 
     st = _star(spark, sf_dir)
@@ -3020,11 +3023,12 @@ def text_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document token counts under the LEARNED BPE segmentation —
     the production token-budget metric (mix_token_budget's regex
-    heuristic, upgraded to a trained tokenizer). The merges are
-    fitted on the driver from one vocabulary collect; the doc->word
-    stream joins the lazily segmented vocabulary as a BROADCAST (the
-    vocab is the small side at any corpus scale), so the corpus never
-    shuffles for the lookup; the per-doc rollup is the only
+    heuristic, upgraded to a trained tokenizer). The merges and every
+    word's segmentation are fitted on the driver from one vocabulary
+    collect; the doc->word stream joins that fitted vocabulary, a
+    local relation, as a BROADCAST (the vocab is the small side at any
+    corpus scale), so the plan scans the documents once, the corpus
+    never shuffles for the lookup, and the per-doc rollup is the only
     corpus-grain exchange. The oracle re-derives the same counts from
     the unrolled-rounds pipeline's final vocabulary."""
     from sales_etl_spark.operators.tokenize import bpe_token_counts
@@ -3098,10 +3102,11 @@ def tokenize_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     behind the unrolled-rounds BPE pipeline, so a drift anywhere —
     a merge rule, a budget boundary doc, a pack offset — flips the
     hash. Scale shape: the tokenizer's build is one vocabulary
-    collect plus the merge rounds on the driver; the chain adds ONE
+    collect plus the merge rounds on the driver, whose segmented
+    vocabulary enters the plan as a local relation; the chain adds ONE
     doc-grain equi-join (counts x source) and two stratum/shard window
-    sums to the lazily segmented vocabulary; nothing quadratic, and
-    no driver state beyond the (word, freq) vocabulary."""
+    sums to the per-document counts; nothing quadratic, and no driver
+    state beyond the (word, freq) vocabulary."""
     from sales_etl_spark.operators import sampling
     from sales_etl_spark.operators.tokenize import bpe_token_counts
 

@@ -184,15 +184,28 @@ def test_bpe_train_build_jobs_do_not_depend_on_n_merges(spark):
 )
 def test_bpe_fit_and_lazy_apply_agree(spark, texts, merges, segs):
     """Adversarial corpora (each stops before its 8 merges): the
-    driver-side fit learns the expected table, and the lazily applied
-    in-row folds segment every word exactly as the driver loop did."""
-    from sales_etl_spark.operators.tokenize import _fit_merges, bpe_train
+    driver-side fit learns the expected table and returns the expected
+    segmentation of every word, and the lazy apply (the learned rules
+    chained as in-row folds over the character-split vocabulary, as a
+    stream applies them) segments every word the same way."""
+    from pyspark.sql import functions as F
+
+    from sales_etl_spark.operators.tokenize import (
+        _merge_fold_sql,
+        bpe_train,
+        word_vocabulary,
+    )
 
     docs = spark.createDataFrame([(t,) for t in texts], "text string")
     got, vocab = bpe_train(docs, "text", n_merges=8)
     assert got == [
         (k, a, b, a + b, cnt) for k, (a, b, cnt) in enumerate(merges)
     ]
-    rows = vocab.collect()
-    _, driver_segs = _fit_merges([(r.w, r.freq) for r in rows], 8)
-    assert {r.w: list(r.s) for r in rows} == driver_segs == segs
+    fitted = sorted((r.w, r.freq, list(r.s)) for r in vocab.collect())
+    assert {w: s for w, _, s in fitted} == segs
+    folded = word_vocabulary(docs, "text")
+    for _, a, b, _, _ in got:
+        folded = folded.select(
+            "w", "freq", F.expr(_merge_fold_sql(a, b)).alias("s")
+        )
+    assert sorted((r.w, r.freq, list(r.s)) for r in folded.collect()) == fitted

@@ -11,6 +11,7 @@ import re
 import pytest
 
 from sales_etl_spark.plans import QUERY_REGISTRY
+from tools.query_profile import python_rdd_scans
 
 SF = "/root/testdata/sf0.001"
 
@@ -155,6 +156,19 @@ def test_map_only_scorers_have_zero_exchanges(spark):
                 and child.getClass().getSimpleName() == "FileSourceScanExec"
             )
             assert spread, f"{name}: unexpected exchange {node.toString()}"
+
+
+def test_bpe_token_count_scans_the_documents_once(spark):
+    # the fitted vocabulary enters the plan as a local relation, so
+    # the corpus is read once, by the doc->word stream; recomputing
+    # the vocabulary would scan it a second time
+    scans = [
+        node.toString()
+        for node in _physical_nodes(_build(spark, "text_bpe_token_count"))
+        if node.getClass().getSimpleName() == "FileSourceScanExec"
+    ]
+    assert len(scans) == 1, scans
+    assert "documents.parquet" in scans[0], scans
 
 
 def test_text_operators_tokenize_once_per_row(spark):
@@ -539,16 +553,22 @@ _SCALAR_BNLJ_OK = {
 
 def test_every_registered_query_obeys_global_plan_invariants(spark):
     """Registry-wide plan audit (analysis only, no execution): NO
-    row-at-a-time Python anywhere, Arrow Python only in the multimodal
-    tier, and no cartesian/nested-loop product outside the declared
-    exact-verification queries. New queries inherit these invariants
-    automatically — a regression in any builder fails here by name."""
+    row-at-a-time Python anywhere — neither a Python UDF nor a scan of
+    a Python RDD (``createDataFrame`` on a Python list), which starts
+    Python workers on every execution; Arrow Python only in the
+    multimodal tier, and no cartesian/nested-loop product outside the
+    declared exact-verification queries. New queries inherit these
+    invariants automatically — a regression in any builder fails here
+    by name."""
     bad: list[str] = []
     for name, qd in QUERY_REGISTRY.items():
-        plan = _formatted(qd.builder(spark, SF))
+        df = qd.builder(spark, SF)
+        plan = _formatted(df)
         body = plan.split("== Physical Plan ==")[-1]
         if "BatchEvalPython" in body:
             bad.append(f"{name}: row-at-a-time Python")
+        if python_rdd_scans(df._jdf.queryExecution()):
+            bad.append(f"{name}: Python RDD scan")
         if "InPandas" in body and name not in _PYTHON_OK:
             bad.append(f"{name}: unexpected Python node")
         if (

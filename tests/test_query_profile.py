@@ -22,7 +22,8 @@ from perfbench.spark_stats import SparkStats  # noqa: E402
 from sales_etl_spark.plans import QUERY_REGISTRY  # noqa: E402
 from sales_etl_spark.plans.registry import clear_plan_cache  # noqa: E402
 from test_plans import _formatted  # noqa: E402
-from tools.query_profile import profile, warm_up  # noqa: E402
+from sales_etl_spark.sources.local import driver_table  # noqa: E402
+from tools.query_profile import plan_summary, profile, warm_up  # noqa: E402
 
 SF = SF_SMOKE
 
@@ -67,6 +68,19 @@ def test_plan_summary_counts_exchanges_like_the_plan_tests(spark, run, name):
     assert want > 0
     assert got["exchanges"] == want, got
     assert got["scan_cols"] and all(n > 0 for n in got["scan_cols"]), got
+
+
+def test_plan_summary_counts_python_rdd_scans(spark):
+    """A Python-list frame runs Python workers on every execution but
+    shows only as ``Scan ExistingRDD``; the summary counts it from the
+    optimized plan's leaves, and an Arrow local relation not at all."""
+    ddl = "k int, v string"
+    listed = spark.createDataFrame([(1, "a")], ddl)
+    local = driver_table(spark, [(2, "b")], ddl)
+    for df, want in ((listed, {"PythonRDD": 1}), (local, {}),
+                     (listed.unionByName(local), {"PythonRDD": 1})):
+        got = plan_summary(_formatted(df), df._jdf.queryExecution())
+        assert got["python"] == want, got
 
 
 def test_ab_swap_imports_each_side_from_its_own_tree(tmp_path):

@@ -21,7 +21,8 @@ of ``__spark_entry__``; the master is ``get_spark``'s default,
   timed ones (``warm_min_s``, ``warm_median_s``), under ``<q>|warm``;
 - stages: per job group, the status-API totals of ``SparkStats``;
 - plan: node counts from the formatted explain of the cold plan,
-  written to ``OUT_DIR/<q>_<side>.txt`` with ``--plans``.
+  written to ``OUT_DIR/<q>_<side>.txt`` with ``--plans``; ``python``
+  also counts the optimized plan's Python-RDD scans as ``PythonRDD``.
 
 ``--ab PINNED_TREE`` (a directory holding a ``sales_etl_spark/``, e.g.
 a ``git worktree``) profiles each query ``--runs`` rounds on both
@@ -102,12 +103,28 @@ def _top_level_fields(schema: str) -> int:
     return fields
 
 
-def plan_summary(plan: str) -> dict:
-    """Node counts of a ``formatted`` explain's physical plan."""
+def python_rdd_scans(qe) -> int:
+    """Leaves of a ``QueryExecution``'s optimized plan that scan a
+    Python RDD (``createDataFrame`` on a Python list, for one): each
+    execution starts Python workers, yet the physical plan shows only
+    a ``Scan ExistingRDD``. Reads each leaf's RDD lineage; runs no job."""
+    leaves = qe.optimizedPlan().collectLeaves()
+    return sum(
+        1 for leaf in map(leaves.apply, range(leaves.length()))
+        if leaf.getClass().getSimpleName() == "LogicalRDD"
+        and "PythonRDD" in leaf.rdd().toDebugString()
+    )
+
+
+def plan_summary(plan: str, qe) -> dict:
+    """Node counts of a ``formatted`` explain's physical plan, plus the
+    Python-RDD scans of ``qe``, the same query's ``QueryExecution``."""
     body = plan.split("== Physical Plan ==")[-1]
     python: dict[str, int] = {}
     for node in _nodes(body, r"\w*(?:EvalPython|InPandas|InArrow)\w*"):
         python[node] = python.get(node, 0) + 1
+    if n := python_rdd_scans(qe):
+        python["PythonRDD"] = n
     return {
         "exchanges": len(_nodes(body, "Exchange")),
         "reused_exchanges": len(_nodes(body, "ReusedExchange")),
@@ -183,7 +200,7 @@ def profile(spark, stats: SparkStats, registry: dict, clear_plan_cache,
         "warm_median_s": statistics.median(warm),
         "memo_hit": again is df,
         "stages": stages,
-        "plan": plan_summary(plan),
+        "plan": plan_summary(plan, qe),
     }
     for k in TIMINGS:
         record[k] = round(record[k], 3)
