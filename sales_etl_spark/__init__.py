@@ -18,7 +18,8 @@ Design stance (SURVEY.md §7.0):
   sum over a different partitioning is a different number — at 100 TB
   that is not a rounding nit, it is nondeterminism);
 - UDFs only where no built-in expression exists, and then always
-  Arrow-vectorized (pandas_udf / mapInPandas), never row-at-a-time.
+  Arrow-batched (pandas_udf / ``operators.multimodal.row_kernel``
+  over mapInArrow), never a row-at-a-time Python UDF.
 """
 
 __version__ = "0.1.0"

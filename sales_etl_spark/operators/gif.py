@@ -17,7 +17,7 @@ applies the palette, and returns an interleaved RGB raster. Interlace
 and local color tables raise — out of scope, fail loudly.
 
 Scale shape: identical to operators/png.py / jpeg.py — per-payload
-byte work inside Arrow-batched mapInPandas; fingerprinting stays
+byte work inside Arrow-batched row kernels; fingerprinting stays
 JVM-side.
 """
 

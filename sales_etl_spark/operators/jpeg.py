@@ -17,8 +17,8 @@ quantization rounds away, and the IDCT of a lone DC returns the
 constant. General rasters are lossy (the point of JPEG) and are
 covered by the tolerance-tier tests, not the driver hash.
 
-Scale shape: the codec runs inside Arrow-batched mapInPandas kernels
-(operators/multimodal.py) — per-payload byte work Spark has no
+Scale shape: the codec runs inside Arrow-batched row kernels
+(operators/multimodal.py:row_kernel over ``mapInArrow``) — per-payload byte work Spark has no
 builtin for; everything after decode (fingerprinting, aggregation)
 stays JVM-side. Reference parity: the reference pipeline has no image
 codec at all (etl/ is tabular CSV->postgres); this extends the

@@ -3,7 +3,9 @@
 The pattern for image/audio/video at 100 TB: the payload is an opaque
 ``binary`` column (or a reference into object storage), metadata is a
 typed struct, and decode/feature-extraction runs as Arrow-batched
-``mapInPandas`` — Spark moves bytes, Python touches each batch once.
+Python row kernels (:func:`row_kernel` over ``mapInArrow``) — Spark
+moves bytes, Python touches each row once, and a kernel is only its
+per-row function.
 
 Decode tiers: ``decode_stub=True`` produces deterministic fake
 features so the plumbing — schema, batching, partition flow — is real
@@ -17,12 +19,16 @@ absent (video/audio need libav).
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
+
+from sales_etl_spark.sources.local import arrow_columns
 
 #: Output schema of featurize_media — fixed regardless of stub/real.
 MEDIA_FEATURES_SCHEMA = (
@@ -31,10 +37,43 @@ MEDIA_FEATURES_SCHEMA = (
 )
 
 
-def _spread_fixture_input(narrow: DataFrame) -> DataFrame:
-    """Spread a fixture synthesizer's NARROW input (doc_id + one or
-    two small ints — never payloads) across the cluster's cores when
-    it arrives under-partitioned.
+def row_kernel(
+    df: DataFrame, fn: Callable[..., Iterable[tuple]], ddl: str
+) -> DataFrame:
+    """Run ``fn`` over every row of ``df`` as an Arrow-batched Python
+    kernel (``mapInArrow``) with output schema ``ddl``.
+
+    ``fn(*row)`` receives one row's values in ``df.columns`` order as
+    plain Python objects (``binary`` arrives as ``bytes``) and yields
+    zero or more output tuples in ``ddl``'s column order. Column names
+    and Arrow types come from ``ddl`` alone, and an output value its
+    column's type cannot hold raises (sources/local.py:arrow_columns).
+    Each Arrow batch in gives one batch out, so per-row Python
+    overhead amortizes over the batch; partitioning is inherited —
+    size input partitions by bytes (maxPartitionBytes), not row count,
+    when payloads are large."""
+    struct = StructType.fromDDL(ddl)
+    schema = to_arrow_schema(struct)
+
+    def run(it):
+        for batch in it:
+            rows = zip(*(col.to_pylist() for col in batch.columns))
+            out = [t for row in rows for t in fn(*row)]
+            yield pa.RecordBatch.from_arrays(
+                arrow_columns(out, schema), schema=schema
+            )
+
+    return df.mapInArrow(run, struct)
+
+
+def _spread_fixture_input(
+    docs: DataFrame, encode: Callable[[int, int], Iterable[tuple]]
+) -> DataFrame:
+    """(media_id long, payload binary) fixture stream: ``encode(doc_id,
+    n_chars)`` yields each document's ``(media_id, payload)`` rows,
+    run by :func:`row_kernel` over the documents' NARROW input (doc_id
+    + n_chars — never payloads), spread across the cluster's cores
+    when it arrives under-partitioned.
 
     Why this exchange is scale-safe where repartitioning media would
     not be: the frames entering the encode kernels are a few bytes per
@@ -50,7 +89,11 @@ def _spread_fixture_input(narrow: DataFrame) -> DataFrame:
     partitioning)."""
     from sales_etl_spark.operators.skew import spread_narrow_input
 
-    return spread_narrow_input(narrow)
+    return row_kernel(
+        spread_narrow_input(docs.select("doc_id", "n_chars")),
+        encode,
+        "media_id long, payload binary",
+    )
 
 
 def documents_as_media(docs: DataFrame) -> DataFrame:
@@ -199,78 +242,51 @@ def _png_stdlib_decode(payload: bytes) -> tuple[int, int, int]:
 
 
 def featurize_media(media: DataFrame, decode_stub: bool = True) -> DataFrame:
-    """Per-item media features via Arrow-batched mapInPandas.
+    """Per-item media features, one row per payload, from an
+    Arrow-batched row kernel (:func:`row_kernel`): the payload bytes
+    cross to Python exactly once."""
+    caps: dict[str, bool] = {}
 
-    Each Python batch is a pandas DataFrame of ~10k rows (Arrow batch
-    size), so per-row Python overhead amortizes; the payload bytes
-    cross to Python exactly once. Partitioning is inherited — size
-    input partitions by bytes (maxPartitionBytes), not row count,
-    when payloads are large."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        caps = None if decode_stub else decode_capability()
-        for pdf in it:
-            rows = []
-            for media_id, mtype, payload in zip(
-                pdf["media_id"], pdf["media_type"], pdf["payload"]
-            ):
-                data = bytes(payload)
-                if caps is not None:
-                    # real tier: PIL pixel decode for images when
-                    # importable; the pure-stdlib PNG decoder covers
-                    # PNG payloads on every box; frame decode for
-                    # audio/video still needs libav
-                    if mtype == "image" and caps["pil"]:
-                        w, h, nf = _pil_decode(data, mtype)
-                    elif mtype == "image" and data[:8] == (
-                        b"\x89PNG\r\n\x1a\n"
-                    ):
-                        w, h, nf = _png_stdlib_decode(data)
-                    elif mtype == "image":
-                        raise NotImplementedError(
-                            "real decode of non-PNG images requires "
-                            "PIL (not importable); PNG decodes via "
-                            "the stdlib codec, or run with "
-                            "decode_stub=True for the deterministic "
-                            "stub"
-                        )
-                    else:
-                        raise NotImplementedError(
-                            "real audio/video decode requires libav "
-                            "(PyAV); only the image tier has a real "
-                            "decoder on this box"
-                        )
-                else:
-                    w, h, nf = _fake_decode(data, mtype)
-                    if mtype == "image":
-                        real = parse_image_dimensions(data)
-                        if real is not None:
-                            w, h = real
-                rows.append(
-                    (
-                        media_id,
-                        mtype,
-                        len(data),
-                        hashlib.md5(data).hexdigest(),
-                        w,
-                        h,
-                        nf,
-                    )
+    def features(media_id, mtype, data):
+        if decode_stub:
+            w, h, nf = _fake_decode(data, mtype)
+            if mtype == "image":
+                w, h = parse_image_dimensions(data) or (w, h)
+        else:
+            # real tier, probed once per task: PIL pixel decode for
+            # images when importable; the pure-stdlib PNG decoder
+            # covers PNG payloads on every box; frame decode for
+            # audio/video still needs libav
+            if not caps:
+                caps.update(decode_capability())
+            if mtype == "image" and caps["pil"]:
+                w, h, nf = _pil_decode(data, mtype)
+            elif mtype == "image" and data[:8] == b"\x89PNG\r\n\x1a\n":
+                w, h, nf = _png_stdlib_decode(data)
+            elif mtype == "image":
+                raise NotImplementedError(
+                    "real decode of non-PNG images requires "
+                    "PIL (not importable); PNG decodes via "
+                    "the stdlib codec, or run with "
+                    "decode_stub=True for the deterministic "
+                    "stub"
                 )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "media_type",
-                    "byte_length",
-                    "content_hash",
-                    "width",
-                    "height",
-                    "n_frames",
-                ],
-            )
+            else:
+                raise NotImplementedError(
+                    "real audio/video decode requires libav "
+                    "(PyAV); only the image tier has a real "
+                    "decoder on this box"
+                )
+        yield (
+            media_id, mtype, len(data), hashlib.md5(data).hexdigest(),
+            w, h, nf,
+        )
 
-    return media.mapInPandas(batches, schema=MEDIA_FEATURES_SCHEMA)
+    return row_kernel(
+        media.select("media_id", "media_type", "payload"),
+        features,
+        MEDIA_FEATURES_SCHEMA,
+    )
 
 
 def sample_frames(
@@ -281,27 +297,20 @@ def sample_frames(
     Frame payloads are stubbed as content-hash strings; a real decoder
     yields JPEG bytes per frame."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if not decode_stub:
-                raise NotImplementedError("real frame extraction needs libav")
-            out = []
-            for media_id, mtype, payload in zip(
-                pdf["media_id"], pdf["media_type"], pdf["payload"]
-            ):
-                data = bytes(payload)
-                _, _, nf = _fake_decode(data, mtype)
-                for idx in range(0, nf, every_n):
-                    frame_id = hashlib.md5(
-                        data + idx.to_bytes(4, "big")
-                    ).hexdigest()
-                    out.append((media_id, idx, frame_id))
-            yield pd.DataFrame(
-                out, columns=["media_id", "frame_idx", "frame_hash"]
-            )
+    def frames(media_id, mtype, data):
+        if not decode_stub:
+            raise NotImplementedError("real frame extraction needs libav")
+        _, _, nf = _fake_decode(data, mtype)
+        for idx in range(0, nf, every_n):
+            frame_id = hashlib.md5(data + idx.to_bytes(4, "big")).hexdigest()
+            yield media_id, idx, frame_id
 
-    return media.filter(F.col("media_type") == "video").mapInPandas(
-        batches, schema="media_id long, frame_idx int, frame_hash string"
+    return row_kernel(
+        media.filter(F.col("media_type") == "video").select(
+            "media_id", "media_type", "payload"
+        ),
+        frames,
+        "media_id long, frame_idx int, frame_hash string",
     )
 
 
@@ -312,8 +321,8 @@ def demean_embeddings_per_group(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Per-group embedding centering via grouped-map ``applyInPandas``
-    (the third pandas-API shape beside ``mapInPandas`` and
-    ``applyInPandasWithState``): each group's vectors arrive as ONE
+    (a genuinely pandas-shaped kernel, unlike the per-row
+    :func:`row_kernel` ones): each group's vectors arrive as ONE
     pandas frame, numpy demeans them in a single vectorized op.
 
     Scale notes: one shuffle on the group key; a group must fit one
@@ -322,7 +331,7 @@ def demean_embeddings_per_group(
     sums, broadcast the means back). Output vectors are float64 —
     exact for the test's cross-check against the native two-pass
     computation."""
-    import numpy as np
+    import pandas as pd
 
     def demean(pdf: pd.DataFrame) -> pd.DataFrame:
         mat = np.array(pdf[vec_col].tolist(), dtype="float64")
@@ -356,28 +365,17 @@ def documents_as_png(docs: DataFrame) -> DataFrame:
     half under test — mirrors documents_as_wav."""
     from sales_etl_spark.operators.png import encode_png
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                d, nc = int(doc_id), int(n_chars)
-                w = 4 + d % 13
-                h = 3 + nc % 11
-                px = bytes(
-                    (d * 31 + y * 17 + x * 7 + nc) % 256
-                    for y in range(h)
-                    for x in range(w)
-                )
-                rows.append(
-                    (d, bytearray(encode_png(px, w, h, lambda y: (d + y) % 5)))
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def encode(d, nc):
+        w = 4 + d % 13
+        h = 3 + nc % 11
+        px = bytes(
+            (d * 31 + y * 17 + x * 7 + nc) % 256
+            for y in range(h)
+            for x in range(w)
+        )
+        yield d, encode_png(px, w, h, lambda y: (d + y) % 5)
 
-    return _spread_fixture_input(
-        docs.select("doc_id", "n_chars")
-    ).mapInPandas(
-        batches, schema="media_id long, payload binary"
-    )
+    return _spread_fixture_input(docs, encode)
 
 
 def png_pixels(media: DataFrame) -> DataFrame:
@@ -387,26 +385,17 @@ def png_pixels(media: DataFrame) -> DataFrame:
     JVM-side as a map-only in-row F.aggregate fold (no posexplode) —
     Python's only job is the byte-level codec work Spark has no
     builtin for."""
+    from sales_etl_spark.operators.png import decode_png
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sales_etl_spark.operators.png import decode_png
+    def pixels(media_id, payload):
+        w, h, ch, px = decode_png(payload)
+        yield media_id, w, h, ch, list(px)
 
-        for pdf in it:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, ch, px = decode_png(bytes(payload))
-                rows.append((media_id, w, h, ch, list(px)))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height", "channels", "pixels"],
-            )
-
-    return media.mapInPandas(
-        batches,
-        schema=(
-            "media_id long, width int, height int, channels int, "
-            "pixels array<int>"
-        ),
+    return row_kernel(
+        media.select("media_id", "payload"),
+        pixels,
+        "media_id long, width int, height int, channels int, "
+        "pixels array<int>",
     )
 
 
@@ -421,34 +410,25 @@ def png_thumbnails(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
     upstream changes every downstream fingerprint. Grayscale rasters
     (channels=1) only — the fixture format; multi-channel would
     resample per channel identically."""
+    from sales_etl_spark.operators.png import decode_png
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sales_etl_spark.operators.png import decode_png
-
-        for pdf in it:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, ch, px = decode_png(bytes(payload))
-                if ch != 1:
-                    raise NotImplementedError(
-                        "png_thumbnails resamples grayscale rasters"
-                    )
-                thumb = [
-                    px[((y * h) // out_h) * w + ((x * w) // out_w)]
-                    for y in range(out_h)
-                    for x in range(out_w)
-                ]
-                rows.append((media_id, w, h, thumb))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "src_w", "src_h", "thumb"],
+    def thumbnail(media_id, payload):
+        w, h, ch, px = decode_png(payload)
+        if ch != 1:
+            raise NotImplementedError(
+                "png_thumbnails resamples grayscale rasters"
             )
+        thumb = [
+            px[((y * h) // out_h) * w + ((x * w) // out_w)]
+            for y in range(out_h)
+            for x in range(out_w)
+        ]
+        yield media_id, w, h, thumb
 
-    return media.mapInPandas(
-        batches,
-        schema=(
-            "media_id long, src_w int, src_h int, thumb array<int>"
-        ),
+    return row_kernel(
+        media.select("media_id", "payload"),
+        thumbnail,
+        "media_id long, src_w int, src_h int, thumb array<int>",
     )
 
 
@@ -461,33 +441,26 @@ def documents_as_pcm_wav(docs: DataFrame) -> DataFrame:
     sample(i) = ((doc_id·13 + i·7 + n_chars) % 65536) − 32768.
     The zero-frame twin (documents_as_wav) covers header parsing;
     this one puts the sample DECODE on the hash-checked path."""
+
+    def encode(d, nc):
+        pcm = ((d * 13 + nc) + np.arange(100 + nc % 400) * 7) % 65536 - 32768
+        yield d, _wav(pcm.astype("<i2").tobytes(), 8000 + (d % 4) * 4000)
+
+    return _spread_fixture_input(docs, encode)
+
+
+def _wav(pcm: bytes, rate: int, channels: int = 1) -> bytes:
+    """A 16-bit PCM WAV file (stdlib ``wave``) holding ``pcm``."""
     import io
     import wave
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                d, nc = int(doc_id), int(n_chars)
-                rate = 8000 + (d % 4) * 4000
-                n = 100 + nc % 400
-                pcm = (
-                    ((d * 13 + nc) + np.arange(n) * 7) % 65536 - 32768
-                ).astype("<i2").tobytes()
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as w:
-                    w.setnchannels(1)
-                    w.setsampwidth(2)
-                    w.setframerate(rate)
-                    w.writeframes(pcm)
-                rows.append((d, bytearray(buf.getvalue())))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
-
-    return _spread_fixture_input(
-        docs.select("doc_id", "n_chars")
-    ).mapInPandas(
-        batches, schema="media_id long, payload binary"
-    )
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(channels)
+        w.setsampwidth(2)
+        w.setframerate(rate)
+        w.writeframes(pcm)
+    return buf.getvalue()
 
 
 def documents_as_chirp_wav(docs: DataFrame) -> DataFrame:
@@ -503,34 +476,13 @@ def documents_as_chirp_wav(docs: DataFrame) -> DataFrame:
     oracle predicts every sample; identical (doc_id·13 + n_chars)
     residues with equal lengths produce identical clips, which is
     exactly the duplicate structure the fingerprint must catch."""
-    import io
-    import wave
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                d, nc = int(doc_id), int(n_chars)
-                rate = 8000 + (d % 4) * 4000
-                n = 100 + nc % 400
-                i = np.arange(n, dtype=np.int64)
-                pcm = (
-                    ((d * 13 + nc) + 7 * i * i) % 65536 - 32768
-                ).astype("<i2").tobytes()
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as w:
-                    w.setnchannels(1)
-                    w.setsampwidth(2)
-                    w.setframerate(rate)
-                    w.writeframes(pcm)
-                rows.append((d, bytearray(buf.getvalue())))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def encode(d, nc):
+        i = np.arange(100 + nc % 400, dtype=np.int64)
+        pcm = ((d * 13 + nc) + 7 * i * i) % 65536 - 32768
+        yield d, _wav(pcm.astype("<i2").tobytes(), 8000 + (d % 4) * 4000)
 
-    return _spread_fixture_input(
-        docs.select("doc_id", "n_chars")
-    ).mapInPandas(
-        batches, schema="media_id long, payload binary"
-    )
+    return _spread_fixture_input(docs, encode)
 
 
 def _riff_chunks(data: bytes, form: bytes):
@@ -589,23 +541,14 @@ def wav_pcm_samples(media: DataFrame) -> DataFrame:
     downstream fingerprinting stays NATIVE, the png_pixels/jpeg_pixels
     contract applied to audio."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                rate, ch, samples = decode_wav_pcm(bytes(payload))
-                rows.append((media_id, rate, ch, samples))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "sample_rate", "channels", "samples"],
-            )
+    def samples(media_id, payload):
+        rate, ch, pcm = decode_wav_pcm(payload)
+        yield media_id, rate, ch, pcm
 
-    return media.mapInPandas(
-        batches,
-        schema=(
-            "media_id long, sample_rate int, channels int, "
-            "samples array<int>"
-        ),
+    return row_kernel(
+        media.select("media_id", "payload"),
+        samples,
+        "media_id long, sample_rate int, channels int, samples array<int>",
     )
 
 
@@ -623,26 +566,15 @@ def documents_as_jpeg(docs: DataFrame) -> DataFrame:
     half; decode_jpeg is the production half under test."""
     from sales_etl_spark.operators.jpeg import encode_jpeg
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                d, nc = int(doc_id), int(n_chars)
-                w = 8 * (1 + d % 3)
-                h = 8 * (1 + nc % 3)
-                ty = np.arange(h).reshape(-1, 1) // 8
-                tx = np.arange(w).reshape(1, -1) // 8
-                px = (
-                    ((d * 37 + nc) + ty * 19 + tx * 11) % 256
-                ).astype(np.uint8).tobytes()
-                rows.append((d, bytearray(encode_jpeg(px, w, h))))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def encode(d, nc):
+        w = 8 * (1 + d % 3)
+        h = 8 * (1 + nc % 3)
+        ty = np.arange(h).reshape(-1, 1) // 8
+        tx = np.arange(w).reshape(1, -1) // 8
+        px = ((d * 37 + nc) + ty * 19 + tx * 11) % 256
+        yield d, encode_jpeg(px.astype(np.uint8).tobytes(), w, h)
 
-    return _spread_fixture_input(
-        docs.select("doc_id", "n_chars")
-    ).mapInPandas(
-        batches, schema="media_id long, payload binary"
-    )
+    return _spread_fixture_input(docs, encode)
 
 
 def jpeg_pixels(media: DataFrame) -> DataFrame:
@@ -651,26 +583,17 @@ def jpeg_pixels(media: DataFrame) -> DataFrame:
     and emit the raster as an int array alongside the decoded
     geometry. Downstream fingerprinting stays JVM-side as a map-only
     in-row F.aggregate fold — the same contract as png_pixels."""
+    from sales_etl_spark.operators.jpeg import decode_jpeg
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sales_etl_spark.operators.jpeg import decode_jpeg
+    def pixels(media_id, payload):
+        w, h, ch, px = decode_jpeg(payload)
+        yield media_id, w, h, ch, list(px)
 
-        for pdf in it:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, ch, px = decode_jpeg(bytes(payload))
-                rows.append((media_id, w, h, ch, list(px)))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height", "channels", "pixels"],
-            )
-
-    return media.mapInPandas(
-        batches,
-        schema=(
-            "media_id long, width int, height int, channels int, "
-            "pixels array<int>"
-        ),
+    return row_kernel(
+        media.select("media_id", "payload"),
+        pixels,
+        "media_id long, width int, height int, channels int, "
+        "pixels array<int>",
     )
 
 
@@ -685,26 +608,15 @@ def documents_as_gif(docs: DataFrame) -> DataFrame:
     dictionary growth, width changes, KwKwK — is on the oracle hash."""
     from sales_etl_spark.operators.gif import encode_gif
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                d, nc = int(doc_id), int(n_chars)
-                w = 5 + d % 12
-                h = 4 + nc % 9
-                y = np.arange(h).reshape(-1, 1)
-                x = np.arange(w).reshape(1, -1)
-                px = (
-                    ((d * 43 + nc) + y * 23 + x * 13) % 256
-                ).astype(np.uint8).tobytes()
-                rows.append((d, bytearray(encode_gif(px, w, h))))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def encode(d, nc):
+        w = 5 + d % 12
+        h = 4 + nc % 9
+        y = np.arange(h).reshape(-1, 1)
+        x = np.arange(w).reshape(1, -1)
+        px = ((d * 43 + nc) + y * 23 + x * 13) % 256
+        yield d, encode_gif(px.astype(np.uint8).tobytes(), w, h)
 
-    return _spread_fixture_input(
-        docs.select("doc_id", "n_chars")
-    ).mapInPandas(
-        batches, schema="media_id long, payload binary"
-    )
+    return _spread_fixture_input(docs, encode)
 
 
 def gif_pixels(media: DataFrame) -> DataFrame:
@@ -712,26 +624,17 @@ def gif_pixels(media: DataFrame) -> DataFrame:
     palette application) emitting the interleaved RGB raster as an
     int array — the png_pixels/jpeg_pixels contract for the third
     image format."""
+    from sales_etl_spark.operators.gif import decode_gif
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sales_etl_spark.operators.gif import decode_gif
+    def pixels(media_id, payload):
+        w, h, ch, px = decode_gif(payload)
+        yield media_id, w, h, ch, list(px)
 
-        for pdf in it:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, ch, px = decode_gif(bytes(payload))
-                rows.append((media_id, w, h, ch, list(px)))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height", "channels", "pixels"],
-            )
-
-    return media.mapInPandas(
-        batches,
-        schema=(
-            "media_id long, width int, height int, channels int, "
-            "pixels array<int>"
-        ),
+    return row_kernel(
+        media.select("media_id", "payload"),
+        pixels,
+        "media_id long, width int, height int, channels int, "
+        "pixels array<int>",
     )
 
 
@@ -748,33 +651,22 @@ def documents_as_mjpeg(docs: DataFrame) -> DataFrame:
     from sales_etl_spark.operators.avi import encode_avi_mjpeg
     from sales_etl_spark.operators.jpeg import encode_jpeg
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                d, nc = int(doc_id), int(n_chars)
-                n_frames = 2 + d % 4
-                w = 8 * (1 + d % 2)
-                h = 8
-                ty = np.arange(h).reshape(-1, 1) // 8
-                tx = np.arange(w).reshape(1, -1) // 8
-                frames = []
-                for f in range(n_frames):
-                    px = (
-                        ((d * 41 + f * 29 + nc) + ty * 19 + tx * 11)
-                        % 256
-                    ).astype(np.uint8).tobytes()
-                    frames.append(encode_jpeg(px, w, h))
-                rows.append(
-                    (d, bytearray(encode_avi_mjpeg(frames, w, h)))
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def encode(d, nc):
+        w, h = 8 * (1 + d % 2), 8
+        ty = np.arange(h).reshape(-1, 1) // 8
+        tx = np.arange(w).reshape(1, -1) // 8
+        frames = [
+            encode_jpeg(
+                (((d * 41 + f * 29 + nc) + ty * 19 + tx * 11) % 256)
+                .astype(np.uint8).tobytes(),
+                w,
+                h,
+            )
+            for f in range(2 + d % 4)
+        ]
+        yield d, encode_avi_mjpeg(frames, w, h)
 
-    return _spread_fixture_input(
-        docs.select("doc_id", "n_chars")
-    ).mapInPandas(
-        batches, schema="media_id long, payload binary"
-    )
+    return _spread_fixture_input(docs, encode)
 
 
 #: media_id offset of the planted near-dup variants emitted by
@@ -827,48 +719,37 @@ def documents_as_mjpeg_planted(docs: DataFrame) -> DataFrame:
     from sales_etl_spark.operators.avi import encode_avi_mjpeg
     from sales_etl_spark.operators.jpeg import encode_jpeg
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n_frames, w, h = 16, 64, 8
+    def render(vals: np.ndarray) -> bytes:
+        # vals: (8 slots, 8 tile-cols) -> 16-frame 64x8 AVI (frame f
+        # carries slot f//2, so sampled even frames hit the grid)
+        frames = []
+        for f in range(16):
+            row = np.repeat(vals[f // 2].astype(np.uint8), 8)
+            frames.append(encode_jpeg(np.tile(row, (8, 1)).tobytes(), 64, 8))
+        return encode_avi_mjpeg(frames, 64, 8)
 
-        def render(vals: np.ndarray) -> bytes:
-            # vals: (8 slots, 8 tile-cols) -> 16-frame AVI (frame f
-            # carries slot f//2, so sampled even frames hit the grid)
-            frames = []
-            for f in range(n_frames):
-                row = np.repeat(vals[f // 2].astype(np.uint8), 8)
-                px = np.tile(row, (h, 1)).tobytes()
-                frames.append(encode_jpeg(px, w, h))
-            return encode_avi_mjpeg(frames, w, h)
+    def encode(d, nc):
+        base, variant = _planted_pair(d, nc, 0, 64, 192)
+        yield d, render(base.reshape(8, 8))
+        yield d + VARIANT_OFFSET, render(variant.reshape(8, 8))
 
-        for pdf in it:
-            rows = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                d, nc = int(doc_id), int(n_chars)
-                i = (
-                    np.arange(8, dtype=np.int64).reshape(-1, 1) * 8
-                    + np.arange(8, dtype=np.int64).reshape(1, -1)
-                )
-                a = (d * 2654435761 + i * 40503 + nc * 97) % 1000003
-                bit = (a * a % 1000003) % 2
-                base = np.where(bit == 1, 192, 64)
-                k = 1 + d % 6
-                flip = np.zeros(64, dtype=bool)
-                for j in range(k):
-                    flip[(d * 7 + 13 * j) % 64] = True
-                variant = np.where(
-                    flip.reshape(8, 8), 256 - base, base
-                )
-                rows.append((d, bytearray(render(base))))
-                rows.append(
-                    (d + VARIANT_OFFSET, bytearray(render(variant)))
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    return _spread_fixture_input(docs, encode)
 
-    return _spread_fixture_input(
-        docs.select("doc_id", "n_chars")
-    ).mapInPandas(
-        batches, schema="media_id long, payload binary"
-    )
+
+def _planted_pair(
+    d: int, nc: int, salt: int, lo: int, hi: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """(base, variant) 64-cell level vectors of document ``d``'s
+    planted pair: each base cell is ``hi`` or ``lo`` by the
+    squared-residue pattern (modality ``salt``), and the variant swaps
+    the level of the k = 1 + d % 6 cells ``(d*7 + 13*j) % 64``."""
+    i = np.arange(64, dtype=np.int64)
+    a = (d * 2654435761 + i * 40503 + nc * 97 + salt) % 1000003
+    base = np.where((a * a % 1000003) % 2 == 1, hi, lo)
+    flip = np.zeros(64, dtype=bool)
+    for j in range(1 + d % 6):
+        flip[(d * 7 + 13 * j) % 64] = True
+    return base, np.where(flip, lo + hi - base, base)
 
 
 def documents_as_png_planted(docs: DataFrame) -> DataFrame:
@@ -885,38 +766,14 @@ def documents_as_png_planted(docs: DataFrame) -> DataFrame:
     decode path."""
     from sales_etl_spark.operators.png import encode_png
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                d, nc = int(doc_id), int(n_chars)
-                i = np.arange(64, dtype=np.int64)
-                a = (
-                    d * 2654435761 + i * 40503 + nc * 97 + 500009
-                ) % 1000003
-                base = np.where((a * a % 1000003) % 2 == 1, 192, 64)
-                flip = np.zeros(64, dtype=bool)
-                for j in range(1 + d % 6):
-                    flip[(d * 7 + 13 * j) % 64] = True
-                variant = np.where(flip, 256 - base, base)
-                for mid, px in (
-                    (d, base),
-                    (d + VARIANT_OFFSET, variant),
-                ):
-                    rows.append((
-                        mid,
-                        bytearray(encode_png(
-                            px.astype(np.uint8).tobytes(), 8, 8,
-                            lambda y: (d + y) % 5,
-                        )),
-                    ))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def encode(d, nc):
+        base, variant = _planted_pair(d, nc, 500009, 64, 192)
+        for mid, px in ((d, base), (d + VARIANT_OFFSET, variant)):
+            yield mid, encode_png(
+                px.astype(np.uint8).tobytes(), 8, 8, lambda y: (d + y) % 5
+            )
 
-    return _spread_fixture_input(
-        docs.select("doc_id", "n_chars")
-    ).mapInPandas(
-        batches, schema="media_id long, payload binary"
-    )
+    return _spread_fixture_input(docs, encode)
 
 
 def documents_as_wav_planted(docs: DataFrame) -> DataFrame:
@@ -931,42 +788,13 @@ def documents_as_wav_planted(docs: DataFrame) -> DataFrame:
     exactly k (uniform window counts make the strict energy threshold
     ``e*64 > total`` degenerate to amplitude-level identity when
     levels are mixed)."""
-    import io
-    import wave
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                d, nc = int(doc_id), int(n_chars)
-                w = np.arange(64, dtype=np.int64)
-                a = (
-                    d * 2654435761 + w * 40503 + nc * 97 + 700001
-                ) % 1000003
-                base = np.where((a * a % 1000003) % 2 == 1, 3000, 1000)
-                flip = np.zeros(64, dtype=bool)
-                for j in range(1 + d % 6):
-                    flip[(d * 7 + 13 * j) % 64] = True
-                variant = np.where(flip, 4000 - base, base)
-                for mid, amps in (
-                    (d, base),
-                    (d + VARIANT_OFFSET, variant),
-                ):
-                    pcm = np.repeat(amps, 32).astype("<i2").tobytes()
-                    buf = io.BytesIO()
-                    with wave.open(buf, "wb") as wv:
-                        wv.setnchannels(1)
-                        wv.setsampwidth(2)
-                        wv.setframerate(8000)
-                        wv.writeframes(pcm)
-                    rows.append((mid, bytearray(buf.getvalue())))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def encode(d, nc):
+        base, variant = _planted_pair(d, nc, 700001, 1000, 3000)
+        for mid, amps in ((d, base), (d + VARIANT_OFFSET, variant)):
+            yield mid, _wav(np.repeat(amps, 32).astype("<i2").tobytes(), 8000)
 
-    return _spread_fixture_input(
-        docs.select("doc_id", "n_chars")
-    ).mapInPandas(
-        batches, schema="media_id long, payload binary"
-    )
+    return _spread_fixture_input(docs, encode)
 
 
 def mjpeg_frame_pixels(media: DataFrame, every_n: int = 1) -> DataFrame:
@@ -979,34 +807,20 @@ def mjpeg_frame_pixels(media: DataFrame, every_n: int = 1) -> DataFrame:
     the frame-extraction shape: container walk + per-frame decode
     inside the executor kernel, only sampled frames ever
     materialize."""
+    from sales_etl_spark.operators.avi import parse_avi_mjpeg
+    from sales_etl_spark.operators.jpeg import decode_jpeg
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sales_etl_spark.operators.avi import parse_avi_mjpeg
-        from sales_etl_spark.operators.jpeg import decode_jpeg
+    def sampled(media_id, payload):
+        w, h, fps, frames = parse_avi_mjpeg(payload)
+        for idx in range(0, len(frames), every_n):
+            fw, fh, ch, px = decode_jpeg(frames[idx])
+            yield media_id, idx, len(frames), fw, fh, list(px)
 
-        for pdf in it:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, fps, frames = parse_avi_mjpeg(bytes(payload))
-                for idx in range(0, len(frames), every_n):
-                    fw, fh, ch, px = decode_jpeg(frames[idx])
-                    rows.append(
-                        (media_id, idx, len(frames), fw, fh, list(px))
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "n_frames",
-                    "width", "height", "pixels",
-                ],
-            )
-
-    return media.mapInPandas(
-        batches,
-        schema=(
-            "media_id long, frame_idx int, n_frames int, "
-            "width int, height int, pixels array<int>"
-        ),
+    return row_kernel(
+        media.select("media_id", "payload"),
+        sampled,
+        "media_id long, frame_idx int, n_frames int, "
+        "width int, height int, pixels array<int>",
     )
 
 
@@ -1209,43 +1023,18 @@ AUDIO_METADATA_SCHEMA = (
 
 
 def audio_metadata(media: DataFrame) -> DataFrame:
-    """Per-item WAV metadata via Arrow-batched mapInPandas (same batch
-    shape as featurize_media). Non-WAV payloads yield NULL audio
-    fields rather than erroring — ingestion keeps flowing and the
-    nulls are the quarantine signal."""
+    """Per-item WAV metadata from an Arrow-batched row kernel (the
+    featurize_media shape). Non-WAV payloads yield NULL audio fields
+    rather than erroring — ingestion keeps flowing and the nulls are
+    the quarantine signal."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                data = bytes(payload)
-                meta = parse_wav_metadata(data)
-                rate, ch, bits, dur = meta if meta else (None,) * 4
-                rows.append(
-                    (
-                        media_id,
-                        len(data),
-                        hashlib.md5(data).hexdigest(),
-                        rate,
-                        ch,
-                        bits,
-                        dur,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "byte_length",
-                    "content_hash",
-                    "sample_rate",
-                    "channels",
-                    "bits",
-                    "duration_ms",
-                ],
-            )
+    def metadata(media_id, data):
+        meta = parse_wav_metadata(data) or (None,) * 4
+        yield (media_id, len(data), hashlib.md5(data).hexdigest(), *meta)
 
-    return media.mapInPandas(batches, schema=AUDIO_METADATA_SCHEMA)
+    return row_kernel(
+        media.select("media_id", "payload"), metadata, AUDIO_METADATA_SCHEMA
+    )
 
 
 def documents_as_wav(docs: DataFrame) -> DataFrame:
@@ -1255,30 +1044,13 @@ def documents_as_wav(docs: DataFrame) -> DataFrame:
     8000 + (doc_id%4)·4000 Hz, 1 + doc_id%2 channels, 16-bit,
     100 + n_chars%1000 zero frames. The synthesizer is the fixture
     half; parse_wav_metadata is the production half under test."""
-    import io
-    import wave
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                rate = 8000 + (int(doc_id) % 4) * 4000
-                channels = 1 + int(doc_id) % 2
-                n_frames = 100 + int(n_chars) % 1000
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as w:
-                    w.setnchannels(channels)
-                    w.setsampwidth(2)
-                    w.setframerate(rate)
-                    w.writeframes(b"\x00" * (n_frames * channels * 2))
-                rows.append((int(doc_id), bytearray(buf.getvalue())))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def encode(d, nc):
+        channels = 1 + d % 2
+        silence = b"\x00" * ((100 + nc % 1000) * channels * 2)
+        yield d, _wav(silence, 8000 + (d % 4) * 4000, channels)
 
-    return _spread_fixture_input(
-        docs.select("doc_id", "n_chars")
-    ).mapInPandas(
-        batches, schema="media_id long, payload binary"
-    )
+    return _spread_fixture_input(docs, encode)
 
 
 # ---------------------------------------------------------------------------
@@ -1342,49 +1114,36 @@ def documents_as_mp4_headers(docs: DataFrame) -> DataFrame:
     is all the metadata tier reads. parse_mp4_metadata is the
     production half under test."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                duration = 500 + (doc_id % 97) * 40  # timescale=1000
-                w = 16 * (1 + doc_id % 9)
-                h = 16 * (1 + n_chars % 7)
-                mvhd = _mp4_box(
-                    b"mvhd",
-                    b"\x00\x00\x00\x00"
-                    + (0).to_bytes(4, "big")
-                    + (0).to_bytes(4, "big")
-                    + (1000).to_bytes(4, "big")      # timescale
-                    + duration.to_bytes(4, "big")
-                    + (0x00010000).to_bytes(4, "big")  # rate 1.0
-                    + (0x0100).to_bytes(2, "big")      # volume 1.0
-                    + b"\x00" * 10
-                    + b"\x00" * 36                     # matrix
-                    + b"\x00" * 24                     # predefined
-                    + (3).to_bytes(4, "big"),          # next track id
-                )
-                traks = [
-                    _mp4_box(b"trak", _mp4_tkhd(1, duration, w, h))
-                ]
-                if doc_id % 2 == 1:
-                    traks.append(
-                        _mp4_box(b"trak", _mp4_tkhd(2, duration, 0, 0))
-                    )
-                moov = _mp4_box(b"moov", mvhd + b"".join(traks))
-                ftyp = _mp4_box(
-                    b"ftyp", b"isom" + (0).to_bytes(4, "big") + b"isom"
-                )
-                mdat = _mp4_box(
-                    b"mdat",
-                    bytes((doc_id + i) % 251 for i in range(32 + n_chars % 64)),
-                )
-                rows.append((doc_id, bytearray(ftyp + moov + mdat)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def encode(doc_id, n_chars):
+        duration = 500 + (doc_id % 97) * 40  # timescale=1000
+        w = 16 * (1 + doc_id % 9)
+        h = 16 * (1 + n_chars % 7)
+        mvhd = _mp4_box(
+            b"mvhd",
+            b"\x00\x00\x00\x00"
+            + (0).to_bytes(4, "big")
+            + (0).to_bytes(4, "big")
+            + (1000).to_bytes(4, "big")      # timescale
+            + duration.to_bytes(4, "big")
+            + (0x00010000).to_bytes(4, "big")  # rate 1.0
+            + (0x0100).to_bytes(2, "big")      # volume 1.0
+            + b"\x00" * 10
+            + b"\x00" * 36                     # matrix
+            + b"\x00" * 24                     # predefined
+            + (3).to_bytes(4, "big"),          # next track id
+        )
+        traks = [_mp4_box(b"trak", _mp4_tkhd(1, duration, w, h))]
+        if doc_id % 2 == 1:
+            traks.append(_mp4_box(b"trak", _mp4_tkhd(2, duration, 0, 0)))
+        moov = _mp4_box(b"moov", mvhd + b"".join(traks))
+        ftyp = _mp4_box(b"ftyp", b"isom" + (0).to_bytes(4, "big") + b"isom")
+        mdat = _mp4_box(
+            b"mdat",
+            bytes((doc_id + i) % 251 for i in range(32 + n_chars % 64)),
+        )
+        yield doc_id, ftyp + moov + mdat
 
-    return _spread_fixture_input(
-        docs.select("doc_id", "n_chars")
-    ).mapInPandas(batches, schema="media_id long, payload binary")
+    return _spread_fixture_input(docs, encode)
 
 
 def documents_as_mp3_headers(docs: DataFrame) -> DataFrame:
@@ -1398,34 +1157,25 @@ def documents_as_mp3_headers(docs: DataFrame) -> DataFrame:
     production half under test."""
     kbps_choices = (64, 96, 128, 160, 192)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                doc_id, n_chars = int(doc_id), int(n_chars)
-                rate_idx = doc_id % 3
-                rate = _MP3_RATES[rate_idx]
-                kbps = kbps_choices[n_chars % 5]
-                br_idx = _MP3_BITRATES.index(kbps)
-                n_frames = 4 + doc_id % 13
-                frame_len = (144 * kbps * 1000) // rate
-                hdr = bytes(
-                    (
-                        0xFF,
-                        0xFB,  # MPEG-1, Layer III, no CRC
-                        (br_idx << 4) | (rate_idx << 2),
-                        0x00,
-                    )
-                )
-                frame = hdr + bytes(
-                    (doc_id + i) % 251 for i in range(frame_len - 4)
-                )
-                rows.append((doc_id, bytearray(frame * n_frames)))
-            yield pd.DataFrame(rows, columns=["media_id", "payload"])
+    def encode(doc_id, n_chars):
+        rate_idx = doc_id % 3
+        rate = _MP3_RATES[rate_idx]
+        kbps = kbps_choices[n_chars % 5]
+        br_idx = _MP3_BITRATES.index(kbps)
+        n_frames = 4 + doc_id % 13
+        frame_len = (144 * kbps * 1000) // rate
+        hdr = bytes(
+            (
+                0xFF,
+                0xFB,  # MPEG-1, Layer III, no CRC
+                (br_idx << 4) | (rate_idx << 2),
+                0x00,
+            )
+        )
+        frame = hdr + bytes((doc_id + i) % 251 for i in range(frame_len - 4))
+        yield doc_id, frame * n_frames
 
-    return _spread_fixture_input(
-        docs.select("doc_id", "n_chars")
-    ).mapInPandas(batches, schema="media_id long, payload binary")
+    return _spread_fixture_input(docs, encode)
 
 
 def _mp4_children(data: bytes, start: int, end: int):

@@ -17,8 +17,9 @@ dominant shapes in practice. 16-bit and Adam7 interlace raise
 ``ValueError`` (honest rejection, not silent garbage).
 
 Scale shape: both codec halves are per-item byte work inside
-Arrow-batched ``mapInPandas`` kernels — Spark moves the binary
-column, Python touches each payload once, and everything downstream
+Arrow-batched row kernels (operators/multimodal.py:row_kernel over
+``mapInArrow``) — Spark moves the binary column, Python touches
+each payload once, and everything downstream
 of the decoded pixels (fingerprint aggregation) is native JVM
 aggregation. At 100 TB only payload size changes, not the plan.
 """

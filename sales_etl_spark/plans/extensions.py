@@ -2088,7 +2088,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernel derives width/height/frames from a content hash
     (decode_stub=True), standing in for external-lib codecs (libav
     etc.) this environment lacks. What it genuinely tests is the
-    Arrow/mapInPandas plumbing — binary payloads crossing to Python
+    Arrow row-kernel plumbing — binary payloads crossing to Python
     once per batch under a fixed output schema — byte-for-byte
     against an oracle that replicates the stub. For REAL decode use
     the media_* tier (media_png_decode / media_jpeg_decode /
@@ -2116,7 +2116,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SYNTHETIC-PAYLOAD compatibility twin — NO real decode: frame
     COUNTS come from the stub's hash-derived metadata, exercising the
-    row-multiplying mapInPandas explode shape (one row per video per
+    row-multiplying row-kernel explode shape (one row per video per
     every-10th frame index). The REAL video path is
     media_mjpeg_frames: actual AVI container walk + per-frame JPEG
     decode with pixel-level oracle checks."""

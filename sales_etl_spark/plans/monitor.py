@@ -1384,8 +1384,8 @@ def multimodal_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio ingestion end-to-end with REAL header parsing: synthesize
     a canonical WAV per document (operators/multimodal.py:
     documents_as_wav — parameters derived from doc fields), run the
-    production parse_wav_metadata over the binary column via
-    Arrow-batched mapInPandas, and hash-compare every parsed field
+    production parse_wav_metadata over the binary column in an
+    Arrow-batched row kernel, and hash-compare every parsed field
     against the oracle's closed-form prediction. Unlike the decode
     stubs this exercises true byte-structure parsing; the plumbing
     (binary columns, Arrow batches, fixed output schema) is the same
@@ -1493,8 +1493,8 @@ def media_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-scanline filter type all closed forms of doc fields, so
     every one of the five PNG filters is exercised), run the
     pure-stdlib decoder (operators/png.py: chunk walk, CRC checks,
-    zlib inflate, scanline unfiltering) over the binary column via
-    Arrow-batched mapInPandas, then fingerprint the decoded raster
+    zlib inflate, scanline unfiltering) over the binary column in
+    an Arrow-batched row kernel, then fingerprint the decoded raster
     MAP-ONLY — an in-row higher-order F.aggregate fold of count/sum/
     position-weighted sum/min/max per image (no posexplode shuffle;
     plan-locked map-only). The oracle predicts all
@@ -1683,8 +1683,8 @@ def media_wav_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     document with NONZERO closed-form samples (operators/
     multimodal.py:documents_as_pcm_wav), decode the sample stream via
     an independent RIFF walk + signed-16 unpack (decode_wav_pcm, not
-    the stdlib wave module that wrote it) in Arrow-batched
-    mapInPandas, then fingerprint the samples NATIVELY (map-only
+    the stdlib wave module that wrote it) in an Arrow-batched row
+    kernel, then fingerprint the samples NATIVELY (map-only
     in-row F.aggregate folds of sum / position-weighted sum / min /
     max — no posexplode shuffle). The oracle predicts
     every sample closed-form, so a wrong byte order, sign extension,
@@ -1847,32 +1847,16 @@ def media_header_dimensions(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = st.documents
 
     def parse_kernel(media: DataFrame, fmt: str) -> DataFrame:
-        def batches(it):
-            import pandas as pd
+        def dimensions(media_id, payload):
+            dims = multimodal.parse_image_dimensions(payload)
+            if dims is None:
+                raise ValueError(f"unparseable {fmt} header for {media_id}")
+            yield media_id, fmt, dims[0], dims[1]
 
-            from sales_etl_spark.operators.multimodal import (
-                parse_image_dimensions,
-            )
-
-            for pdf in it:
-                rows = []
-                for media_id, payload in zip(
-                    pdf["media_id"], pdf["payload"]
-                ):
-                    dims = parse_image_dimensions(bytes(payload))
-                    if dims is None:
-                        raise ValueError(
-                            f"unparseable {fmt} header for {media_id}"
-                        )
-                    rows.append((media_id, fmt, dims[0], dims[1]))
-                yield pd.DataFrame(
-                    rows,
-                    columns=["media_id", "fmt", "width", "height"],
-                )
-
-        return media.mapInPandas(
-            batches,
-            schema="media_id long, fmt string, width int, height int",
+        return multimodal.row_kernel(
+            media.select("media_id", "payload"),
+            dimensions,
+            "media_id long, fmt string, width int, height int",
         )
 
     png = parse_kernel(multimodal.documents_as_png(docs), "png")
@@ -3200,7 +3184,7 @@ def media_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     growth, variable code widths, KwKwK, CLEAR resets — sits on the
     oracle hash. Synthesize a GIF87a per document
     (operators/multimodal.py:documents_as_gif), LZW-decode + apply
-    the palette via Arrow-batched mapInPandas (operators/gif.py,
+    the palette in an Arrow-batched row kernel (operators/gif.py,
     validated against 10 real-world 87a/89a files from other encoders
     in tests), fingerprint the interleaved RGB stream natively. The
     gray palette maps index i to (i,i,i), so the oracle enumerates
@@ -3364,7 +3348,7 @@ def media_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     and every 8x8-constant tile closed forms of doc fields), run the
     pure Python+NumPy decoder (operators/jpeg.py: marker walk,
     canonical-Huffman entropy decode, dequantize, separable IDCT)
-    over the binary column via Arrow-batched mapInPandas, then
+    over the binary column in an Arrow-batched row kernel, then
     fingerprint the decoded raster MAP-ONLY (in-row higher-order
     F.aggregate fold of count/sum/position-weighted sum/min/max per
     image — no posexplode, zero exchanges; plan-locked by
@@ -5841,56 +5825,22 @@ def media_container_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         "height int, sample_rate int, bitrate_kbps int"
     )
 
-    def mp4_batches(it):
-        import pandas as pd
+    def mp4_meta(media_id, payload):
+        meta = multimodal.parse_mp4_metadata(payload)
+        if meta is None:
+            raise ValueError(f"unparseable mp4 for {media_id}")
+        yield media_id, "mp4", meta[0], meta[1], meta[2], None, None
 
-        from sales_etl_spark.operators.multimodal import (
-            parse_mp4_metadata,
-        )
+    def mp3_meta(media_id, payload):
+        meta = multimodal.parse_mp3_metadata(payload)
+        if meta is None:
+            raise ValueError(f"unparseable mp3 for {media_id}")
+        yield media_id, "mp3", meta[2], None, None, meta[0], meta[1]
 
-        for pdf in it:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                meta = parse_mp4_metadata(bytes(payload))
-                if meta is None:
-                    raise ValueError(f"unparseable mp4 for {media_id}")
-                rows.append(
-                    (int(media_id), "mp4", meta[0], meta[1], meta[2],
-                     None, None)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "fmt", "duration_ms", "width",
-                         "height", "sample_rate", "bitrate_kbps"],
-            )
-
-    def mp3_batches(it):
-        import pandas as pd
-
-        from sales_etl_spark.operators.multimodal import (
-            parse_mp3_metadata,
-        )
-
-        for pdf in it:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                meta = parse_mp3_metadata(bytes(payload))
-                if meta is None:
-                    raise ValueError(f"unparseable mp3 for {media_id}")
-                rows.append(
-                    (int(media_id), "mp3", meta[2], None, None,
-                     meta[0], meta[1])
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "fmt", "duration_ms", "width",
-                         "height", "sample_rate", "bitrate_kbps"],
-            )
-
-    mp4 = multimodal.documents_as_mp4_headers(docs).mapInPandas(
-        mp4_batches, schema=schema
+    mp4 = multimodal.row_kernel(
+        multimodal.documents_as_mp4_headers(docs), mp4_meta, schema
     )
-    mp3 = multimodal.documents_as_mp3_headers(docs).mapInPandas(
-        mp3_batches, schema=schema
+    mp3 = multimodal.row_kernel(
+        multimodal.documents_as_mp3_headers(docs), mp3_meta, schema
     )
     return mp4.unionByName(mp3)

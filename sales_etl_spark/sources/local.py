@@ -7,6 +7,9 @@ execution of such a plan starts Python workers to re-serialize rows
 the driver already holds. An Arrow table instead becomes a JVM
 ``LocalRelation`` (a ``LocalTableScan`` once planned): the rows travel
 once, at build time, and whatever runs the plan never leaves the JVM.
+
+:func:`arrow_columns` types tuples by a schema for both this and the
+Python row kernels' output batches (operators/multimodal.py:row_kernel).
 """
 
 from __future__ import annotations
@@ -27,12 +30,16 @@ def driver_table(
     NULLs."""
     struct = StructType.fromDDL(ddl)
     schema = to_arrow_schema(struct)
-    rows = list(rows)
-    table = pa.Table.from_arrays(
-        [
-            pa.array([r[i] for r in rows], type=f.type)
-            for i, f in enumerate(schema)
-        ],
-        schema=schema,
-    )
+    table = pa.Table.from_arrays(arrow_columns(rows, schema), schema=schema)
     return spark.createDataFrame(table, struct)
+
+
+def arrow_columns(rows: Iterable[tuple], schema: pa.Schema) -> list[pa.Array]:
+    """``rows`` (tuples in ``schema``'s field order) as one typed Arrow
+    array per field. A value its field's type cannot hold (an ``int``
+    field given 2**31, say) raises instead of wrapping."""
+    rows = list(rows)
+    return [
+        pa.array([r[i] for r in rows], type=f.type)
+        for i, f in enumerate(schema)
+    ]

@@ -4,6 +4,8 @@ though the decode kernel is stubbed (no image/audio libs here)."""
 
 from __future__ import annotations
 
+import hashlib
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.utils import PythonException
@@ -11,6 +13,7 @@ from pyspark.sql.utils import PythonException
 from sales_etl_spark.operators.multimodal import (
     documents_as_media,
     featurize_media,
+    row_kernel,
     sample_frames,
 )
 from sales_etl_spark.sources.star import load_star
@@ -1403,3 +1406,98 @@ def test_mp4_mp3_metadata_parsers_roundtrip_and_robustness(spark):
     assert parse_mp3_metadata(junky) == parse_mp3_metadata(sample3)
     assert parse_mp3_metadata(b"\x00\x01\x02") is None
     assert parse_mp4_metadata(b"\x00\x01\x02") is None
+
+
+def _fanout(spark):
+    # one input row gives i % 3 output rows: 0, 1 and 2
+    df = spark.range(0, 6, 1, 2)
+    want = [(i, j) for i in range(6) for j in range(i % 3)]
+    return row_kernel(df, lambda i: ((i, j) for j in range(i % 3)),
+                      "id long, j int"), want
+
+
+def _mjpeg_sampled_frames(spark):
+    # every 3rd of 2..5 frames: one or two rows per video
+    from sales_etl_spark.operators.multimodal import (
+        documents_as_mjpeg,
+        mjpeg_frame_pixels,
+    )
+
+    docs = load_star(spark, SF).documents.filter("doc_id < 8")
+    ids = [r.doc_id for r in docs.select("doc_id").collect()]
+    df = mjpeg_frame_pixels(documents_as_mjpeg(docs), every_n=3).select(
+        "media_id", "frame_idx", "n_frames")
+    want = [(d, f, 2 + d % 4) for d in ids for f in range(0, 2 + d % 4, 3)]
+    return df, want
+
+
+def _planted_base_and_variant(spark):
+    # one document gives its base and its re-encoded variant
+    from sales_etl_spark.operators.multimodal import (
+        VARIANT_OFFSET,
+        documents_as_png_planted,
+    )
+
+    docs = spark.createDataFrame([(3, 40), (4, 41)], "doc_id long, n_chars int")
+    df = documents_as_png_planted(docs).select("media_id")
+    return df, [(m,) for d in (3, 4) for m in (d, d + VARIANT_OFFSET)]
+
+
+def _empty_partitions(spark):
+    # 3 rows over 5 partitions, a partition whose rows all yield
+    # nothing (an empty output batch), and no rows at all
+    df = spark.range(0, 3, 1, 5).unionByName(
+        spark.range(10, 14, 1, 1)).unionByName(spark.range(0))
+    out = row_kernel(df, lambda i: [(i * 10,)] if i < 10 else [], "x long")
+    return out, [(0,), (10,), (20,)]
+
+
+def _null_fields(spark):
+    from sales_etl_spark.operators.multimodal import audio_metadata
+
+    media = spark.createDataFrame(
+        [(7, bytearray(b"JUNKJUNKJUNK"))], "media_id long, payload binary")
+    want = [(7, 12, hashlib.md5(b"JUNKJUNKJUNK").hexdigest(),
+             None, None, None, None)]
+    return audio_metadata(media), want
+
+
+def _binary_and_int_array(spark):
+    payloads = [b"", b"\x00\xff\x00", bytes(range(256))]
+    df = spark.createDataFrame(
+        [(i, bytearray(p)) for i, p in enumerate(payloads)],
+        "i long, payload binary")
+    out = row_kernel(
+        df,
+        lambda i, p: [(i, p, list(p), type(p).__name__)],
+        "i long, payload binary, ints array<int>, kind string",
+    )
+    want = [(i, p, list(p), "bytes") for i, p in enumerate(payloads)]
+    return out, want
+
+
+def _int_out_of_range(spark):
+    return row_kernel(spark.range(1), lambda i: [(2**31,)], "v int"), None
+
+
+@pytest.mark.parametrize("case", [
+    _fanout, _mjpeg_sampled_frames, _planted_base_and_variant,
+    _empty_partitions, _null_fields, _binary_and_int_array,
+    _int_out_of_range,
+], ids=lambda c: c.__name__.lstrip("_"))
+def test_row_kernel_rows_types_and_range_checks(spark, case):
+    """``row_kernel`` gives exactly the tuples its row function yields,
+    typed by the DDL: any number of rows per input row, empty
+    partitions, NULL fields, ``binary`` in and out as ``bytes``, and
+    ``array<int>``. A value outside the DDL's ``int`` raises instead
+    of wrapping."""
+    df, want = case(spark)
+    if want is None:
+        with pytest.raises(PythonException, match="too large"):
+            df.collect()
+        return
+    got = [
+        tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)
+        for r in df.collect()
+    ]
+    assert sorted(got, key=repr) == sorted(want, key=repr)

@@ -69,14 +69,14 @@ def test_relational_paths_have_no_python_nodes(spark):
     ]
     for name in relational:
         plan = _formatted(_build(spark, name))
-        assert not re.search(r"EvalPython|InPandas", plan), name
+        assert not re.search(r"EvalPython|InPandas|InArrow", plan), name
 
 
 def test_multimodal_is_arrow_batched_python(spark):
-    # the ONE place Python belongs — and it must be Arrow/pandas
-    # (mapInPandas), never row-at-a-time BatchEvalPython
+    # the ONE place Python belongs — and it must be an Arrow row
+    # kernel (mapInArrow), never row-at-a-time BatchEvalPython
     plan = _formatted(_build(spark, "multimodal_features"))
-    assert "InPandas" in plan
+    assert "MapInArrow" in plan
     assert "BatchEvalPython" not in plan
 
 
@@ -116,7 +116,7 @@ def test_decontam_broadcasts_eval_grams_single_doc_shuffle(spark):
     # distinct adds its own small-side exchanges, but the big gram
     # stream shuffles exactly once
     body = plan.split("== Physical Plan ==")[1]
-    assert not re.search(r"EvalPython|InPandas", body)
+    assert not re.search(r"EvalPython|InPandas|InArrow", body)
 
 
 def _physical_nodes(df):
@@ -556,8 +556,10 @@ def test_every_registered_query_obeys_global_plan_invariants(spark):
     row-at-a-time Python anywhere — neither a Python UDF nor a scan of
     a Python RDD (``createDataFrame`` on a Python list), which starts
     Python workers on every execution; Arrow Python only in the
-    multimodal tier, and no cartesian/nested-loop product outside the
-    declared exact-verification queries. New queries inherit these
+    multimodal tier, and there as ``row_kernel``s over ``mapInArrow``,
+    never a hand-written ``mapInPandas`` row loop; no
+    cartesian/nested-loop product outside the declared
+    exact-verification queries. New queries inherit these
     invariants automatically — a regression in any builder fails here
     by name."""
     bad: list[str] = []
@@ -569,8 +571,10 @@ def test_every_registered_query_obeys_global_plan_invariants(spark):
             bad.append(f"{name}: row-at-a-time Python")
         if python_rdd_scans(df._jdf.queryExecution()):
             bad.append(f"{name}: Python RDD scan")
-        if "InPandas" in body and name not in _PYTHON_OK:
+        if re.search(r"InPandas|InArrow", body) and name not in _PYTHON_OK:
             bad.append(f"{name}: unexpected Python node")
+        if re.search(r"\bMapInPandas\b", body):
+            bad.append(f"{name}: mapInPandas row loop, not row_kernel")
         if (
             re.search(r"CartesianProduct", body)
             and name not in _CARTESIAN_OK

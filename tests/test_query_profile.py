@@ -23,7 +23,12 @@ from sales_etl_spark.plans import QUERY_REGISTRY  # noqa: E402
 from sales_etl_spark.plans.registry import clear_plan_cache  # noqa: E402
 from test_plans import _formatted  # noqa: E402
 from sales_etl_spark.sources.local import driver_table  # noqa: E402
-from tools.query_profile import plan_summary, profile, warm_up  # noqa: E402
+from tools.query_profile import (  # noqa: E402
+    _median,
+    plan_summary,
+    profile,
+    warm_up,
+)
 
 SF = SF_SMOKE
 
@@ -81,6 +86,17 @@ def test_plan_summary_counts_python_rdd_scans(spark):
                      (listed.unionByName(local), {"PythonRDD": 1})):
         got = plan_summary(_formatted(df), df._jdf.queryExecution())
         assert got["python"] == want, got
+
+
+def test_median_counts_a_stage_field_missing_in_one_round_as_zero():
+    """An ``--ab`` round whose build ran no job records only
+    ``{"jobs": 0}``; the per-side median must still take every round."""
+    rounds = [{"build": {"jobs": 1, "job_s": 0.5}, "q": "x"},
+              {"build": {"jobs": 0}, "q": "x"},
+              {"build": {"jobs": 1, "job_s": 0.3}, "q": "x"}]
+    for order in (rounds, rounds[::-1], rounds[1:] + rounds[:1]):
+        assert _median(order) == {"build": {"jobs": 1, "job_s": 0.3},
+                                  "q": "x"}
 
 
 def test_ab_swap_imports_each_side_from_its_own_tree(tmp_path):

@@ -208,11 +208,13 @@ def profile(spark, stats: SparkStats, registry: dict, clear_plan_cache,
 
 
 def _median(values: list):
-    """Field-wise median of equally shaped records; non-numbers are
-    taken from the first."""
+    """Field-wise median of records; non-numbers are taken from the
+    first. A field only some records hold counts as 0 in the others: a
+    job group that ran no job records ``{"jobs": 0}`` and no times."""
     first = values[0]
     if isinstance(first, dict):
-        return {k: _median([v[k] for v in values]) for k in first}
+        keys = dict.fromkeys(k for v in values for k in v)
+        return {k: _median([v.get(k, 0) for v in values]) for k in keys}
     if isinstance(first, (int, float)) and not isinstance(first, bool):
         return statistics.median(values)
     return first
