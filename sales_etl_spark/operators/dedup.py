@@ -19,7 +19,7 @@ across runs/partitions, no Python in the loop.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -1072,6 +1072,23 @@ def scrub_hot_lines(
     )
 
 
+def hash_bands() -> Column:
+    """The four 16-bit LSH bands of a 64-bit ``(hash_lo, hash_hi)``
+    fingerprint, as one ``posexplode`` generator of ``(band_idx,
+    band_val)`` rows: bands 0 and 1 are the low and high 16 bits of
+    ``hash_lo``, bands 2 and 3 those of ``hash_hi``. The one band split
+    of every perceptual tier (the DuckDB oracles state it on their
+    own)."""
+    return F.posexplode(
+        F.array(
+            F.col("hash_lo") % 65536,
+            F.shiftright("hash_lo", 16),
+            F.col("hash_hi") % 65536,
+            F.shiftright("hash_hi", 16),
+        )
+    ).alias("band_idx", "band_val")
+
+
 def banded_hamming_pairs(
     hashed: DataFrame,
     id_col: str = "media_id",
@@ -1080,11 +1097,11 @@ def banded_hamming_pairs(
 ) -> DataFrame:
     """Shared verify half of the perceptual dedup tiers: from a
     (id, hash_lo, hash_hi) 64-bit fingerprint frame, emit the ordered
-    pairs sharing at least one 16-bit LSH band whose FULL hashes
-    differ in ≤ ``max_hamming`` bits — :func:`simhash_pairs`' ladder
-    restated over split-half hashes (dedup_phash_pairs and
-    dedup_audio_pairs both build on this, so a threshold or cap tweak
-    lands in one place).
+    pairs sharing at least one 16-bit LSH band (:func:`hash_bands`)
+    whose FULL hashes differ in ≤ ``max_hamming`` bits —
+    :func:`simhash_pairs`' ladder restated over split-half hashes
+    (the image, audio and video pair queries all build on this, so a
+    threshold or cap tweak lands in one place).
 
     Band buckets holding more than ``cap`` members are dropped before
     the pair join (near-constant media carry no discriminating power —
@@ -1100,24 +1117,8 @@ def banded_hamming_pairs(
     join side is a reused exchange. Hot-bucket rows cross that shuffle
     before the cap drops them (a ~4N/cap-row drop list used to be
     broadcast and anti-joined map-side); in exchange the plan caches
-    nothing. The window also keeps the optimizer's inferred
-    ``isnotnull(hash_lo/hash_hi)`` above the shuffle, so the hash
-    expressions — interpreted higher-order folds for the image, audio
-    and video fingerprints — are never copied into a pushed per-row
-    filter."""
-    bands = hashed.select(
-        F.col(id_col),
-        "hash_lo",
-        "hash_hi",
-        F.posexplode(
-            F.array(
-                F.col("hash_lo") % 65536,
-                (F.col("hash_lo") / 65536).cast("bigint"),
-                F.col("hash_hi") % 65536,
-                (F.col("hash_hi") / 65536).cast("bigint"),
-            )
-        ).alias("band_idx", "band_val"),
-    )
+    nothing."""
+    bands = hashed.select(F.col(id_col), "hash_lo", "hash_hi", hash_bands())
     kept = bands.withColumn(
         "c",
         F.count(F.lit(1)).over(Window.partitionBy("band_idx", "band_val")),

@@ -381,10 +381,10 @@ def documents_as_png(docs: DataFrame) -> DataFrame:
 def png_pixels(media: DataFrame) -> DataFrame:
     """Arrow-batched REAL PNG decode: inflate + unfilter every payload
     (operators/png.py:decode_png) and emit the raster as an int array
-    alongside the decoded geometry. Downstream fingerprinting stays
-    JVM-side as a map-only in-row F.aggregate fold (no posexplode) —
-    Python's only job is the byte-level codec work Spark has no
-    builtin for."""
+    alongside the decoded geometry; the decode-tier queries checksum
+    it JVM-side (plans/monitor.py:_fingerprint_array). The perceptual
+    aHash runs in its own kernel (:func:`png_ahash`), so only its
+    result crosses into the JVM."""
     from sales_etl_spark.operators.png import decode_png
 
     def pixels(media_id, payload):
@@ -402,34 +402,74 @@ def png_pixels(media: DataFrame) -> DataFrame:
 def png_thumbnails(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
     """REAL image resize over REAL decoded pixels: decode each PNG
     payload (operators/png.py), nearest-neighbor resample the raster
-    to ``out_w x out_h`` (source index = (dst * src_dim) // out_dim —
-    the canonical NN mapping, works for down- AND up-sampling), and
-    emit the thumbnail as an int array. This replaces the stub tier
-    for the resize step of multimodal ingestion: the pixels flowing
-    out are the decoded payload's pixels, so a decode or indexing bug
-    upstream changes every downstream fingerprint. Grayscale rasters
-    (channels=1) only — the fixture format; multi-channel would
-    resample per channel identically."""
-    from sales_etl_spark.operators.png import decode_png
+    to ``out_w x out_h`` (:func:`_thumbnail`) and emit the thumbnail
+    as an int array. This replaces the stub tier for the resize step
+    of multimodal ingestion: the pixels flowing out are the decoded
+    payload's pixels, so a decode or indexing bug upstream changes
+    every downstream fingerprint."""
 
     def thumbnail(media_id, payload):
-        w, h, ch, px = decode_png(payload)
-        if ch != 1:
-            raise NotImplementedError(
-                "png_thumbnails resamples grayscale rasters"
-            )
-        thumb = [
-            px[((y * h) // out_h) * w + ((x * w) // out_w)]
-            for y in range(out_h)
-            for x in range(out_w)
-        ]
-        yield media_id, w, h, thumb
+        w, h, thumb = _thumbnail(payload, out_w, out_h)
+        yield media_id, w, h, thumb.tolist()
 
     return row_kernel(
         media.select("media_id", "payload"),
         thumbnail,
         "media_id long, src_w int, src_h int, thumb array<int>",
     )
+
+
+def _thumbnail(
+    payload: bytes, out_w: int, out_h: int
+) -> tuple[int, int, np.ndarray]:
+    """``(src_w, src_h, thumb)`` of a PNG payload: the decoded raster
+    nearest-neighbor resampled to ``out_w x out_h`` (source index =
+    (dst * src_dim) // out_dim — the canonical NN mapping, works for
+    down- AND up-sampling), as a row-major int64 array. Grayscale
+    rasters (channels=1) only — the fixture format; multi-channel
+    would resample per channel identically."""
+    from sales_etl_spark.operators.png import decode_png
+
+    w, h, ch, px = decode_png(payload)
+    if ch != 1:
+        raise NotImplementedError("png_thumbnails resamples grayscale rasters")
+    ys = (np.arange(out_h) * h) // out_h
+    xs = (np.arange(out_w) * w) // out_w
+    raster = np.frombuffer(px, np.uint8).astype(np.int64)
+    return w, h, raster[(ys[:, None] * w + xs).ravel()]
+
+
+#: Side of the perceptual grids: the image aHash's 8x8 thumbnail, and
+#: the video signature's 8 temporal slots x 8 column sums.
+_GRID = 8
+#: Equal-index-share energy windows of the audio fingerprint.
+_AUDIO_WINDOWS = 64
+#: Output of the fingerprint kernels; ``banded_hamming_pairs`` reads it.
+_HASH_DDL = "media_id long, hash_lo long, hash_hi long"
+
+
+def _pack_halves(bits) -> tuple[int, int]:
+    """``(hash_lo, hash_hi)`` of 64 bits in index order: bits 0-31
+    are bits 0-31 of ``hash_lo``, bits 32-63 those of ``hash_hi``."""
+    packed = np.packbits(np.asarray(bits, dtype=bool), bitorder="little")
+    return (
+        int.from_bytes(packed[:4].tobytes(), "little"),
+        int.from_bytes(packed[4:].tobytes(), "little"),
+    )
+
+
+def png_ahash(media: DataFrame) -> DataFrame:
+    """(media_id, hash_lo, hash_hi): the 64-bit aHash of every PNG
+    payload, computed in the decode kernel — decode, 8x8
+    nearest-neighbor thumbnail (:func:`_thumbnail`), then bit k is
+    ``thumb[k] * 64 >= sum(thumb)`` (the mean threshold,
+    cross-multiplied so it stays integer exact)."""
+
+    def ahash(media_id, payload):
+        _, _, thumb = _thumbnail(payload, _GRID, _GRID)
+        yield (media_id, *_pack_halves(thumb * thumb.size >= thumb.sum()))
+
+    return row_kernel(media.select("media_id", "payload"), ahash, _HASH_DDL)
 
 
 def documents_as_pcm_wav(docs: DataFrame) -> DataFrame:
@@ -537,9 +577,9 @@ def decode_wav_pcm(data: bytes) -> tuple[int, int, list[int]]:
 
 def wav_pcm_samples(media: DataFrame) -> DataFrame:
     """Arrow-batched REAL PCM sample decode (decode_wav_pcm) emitting
-    the sample stream as an int array alongside the decoded rate —
-    downstream fingerprinting stays NATIVE, the png_pixels/jpeg_pixels
-    contract applied to audio."""
+    the sample stream as an int array alongside the decoded rate — the
+    png_pixels contract applied to audio; the fingerprint is
+    :func:`wav_energy_hash`'s own kernel."""
 
     def samples(media_id, payload):
         rate, ch, pcm = decode_wav_pcm(payload)
@@ -549,6 +589,37 @@ def wav_pcm_samples(media: DataFrame) -> DataFrame:
         media.select("media_id", "payload"),
         samples,
         "media_id long, sample_rate int, channels int, samples array<int>",
+    )
+
+
+def wav_energy_hash(media: DataFrame) -> DataFrame:
+    """(media_id, hash_lo, hash_hi): the 64-bit energy-envelope
+    fingerprint of every WAV payload, computed in the decode kernel.
+    The n decoded samples split into 64 equal-index-share windows
+    (window w holds samples ``(w*n)//64`` up to ``((w+1)*n)//64``);
+    bit w is ``e[w] * n > total * cnt[w]`` with ``e`` the window's
+    energy Σv², ``cnt`` its sample count and ``total`` the clip's
+    energy — the window's mean energy strictly above the clip's,
+    cross-multiplied. The 64 comparisons run on Python ints, so no
+    product wraps however long the clip."""
+
+    def energy_hash(media_id, payload):
+        _, _, pcm = decode_wav_pcm(payload)
+        n = len(pcm)
+        energy = np.cumsum(np.square(np.asarray(pcm, dtype=np.int64)))
+        energy = np.concatenate([[0], energy])
+        ends = (np.arange(_AUDIO_WINDOWS + 1) * n) // _AUDIO_WINDOWS
+        total = int(energy[-1])
+        bits = [
+            e * n > total * cnt
+            for e, cnt in zip(
+                np.diff(energy[ends]).tolist(), np.diff(ends).tolist()
+            )
+        ]
+        yield (media_id, *_pack_halves(bits))
+
+    return row_kernel(
+        media.select("media_id", "payload"), energy_hash, _HASH_DDL
     )
 
 
@@ -698,7 +769,7 @@ def documents_as_mjpeg_planted(docs: DataFrame) -> DataFrame:
       every intermediate fits signed 64-bit in numpy, Spark and
       DuckDB alike.
       Geometry is chosen so the every-2nd-frame 8x8 grid signature
-      (video_grid_signature) maps cell (t, c) 1:1 onto tile c of
+      (video_grid_hash) maps cell (t, c) 1:1 onto tile c of
       frame 2t, and with exactly two levels the mean threshold makes
       bit(t,c) EQUAL the pattern bit (192 >= mean always, 64 >= mean
       only in the degenerate all-64 corner);
@@ -798,23 +869,18 @@ def documents_as_wav_planted(docs: DataFrame) -> DataFrame:
 
 
 def mjpeg_frame_pixels(media: DataFrame, every_n: int = 1) -> DataFrame:
-    """Arrow-batched REAL video frame sampling + decode: walk the AVI
-    container (operators/avi.py:parse_avi_mjpeg), keep every
-    ``every_n``-th frame (the sample_frames stride contract, now over
-    real payloads), decode each kept frame's JPEG (operators/jpeg.py)
-    and emit its raster as an int array. One output row per sampled
-    frame; fingerprinting stays NATIVE downstream. At 100 TB this is
-    the frame-extraction shape: container walk + per-frame decode
-    inside the executor kernel, only sampled frames ever
-    materialize."""
-    from sales_etl_spark.operators.avi import parse_avi_mjpeg
-    from sales_etl_spark.operators.jpeg import decode_jpeg
+    """Arrow-batched REAL video frame sampling + decode
+    (:func:`_sampled_frames`), emitting each sampled frame's raster as
+    an int array: one output row per sampled frame, which
+    media_mjpeg_frames checksums JVM-side. The per-video reductions
+    (:func:`mjpeg_grid_hash`, :func:`mjpeg_motion_features`) run the
+    same decode loop in their own kernels, so only their results
+    cross into the JVM."""
 
     def sampled(media_id, payload):
-        w, h, fps, frames = parse_avi_mjpeg(payload)
-        for idx in range(0, len(frames), every_n):
-            fw, fh, ch, px = decode_jpeg(frames[idx])
-            yield media_id, idx, len(frames), fw, fh, list(px)
+        n_frames, frames = _sampled_frames(payload, every_n)
+        for idx, (fw, fh, px) in zip(range(0, n_frames, every_n), frames):
+            yield media_id, idx, n_frames, fw, fh, list(px)
 
     return row_kernel(
         media.select("media_id", "payload"),
@@ -824,164 +890,111 @@ def mjpeg_frame_pixels(media: DataFrame, every_n: int = 1) -> DataFrame:
     )
 
 
-def video_grid_signature(frames: DataFrame) -> DataFrame:
-    """Per-VIDEO 64-bit perceptual signature from decoded sampled
-    frames — the video member of the fingerprint family (image:
-    png_thumbnails + aHash in plans/monitor._phash_hashed; audio:
-    energy-envelope halves in plans/monitor._afp_hashed): an 8x8
-    TEMPORAL-SPATIAL grid aHash. Rows in = ``mjpeg_frame_pixels``
-    output (media_id, frame_idx, width, height, pixels); rows out =
-    (media_id, hash_lo, hash_hi).
+def _sampled_frames(
+    payload: bytes, every_n: int
+) -> tuple[int, list[tuple[int, int, bytes]]]:
+    """``(n_frames, [(width, height, raster), ...])`` of an AVI-MJPEG
+    payload: walk the container (operators/avi.py:parse_avi_mjpeg),
+    keep every ``every_n``-th frame (the sample_frames stride
+    contract, frames 0, every_n, ...) and decode each kept frame's
+    JPEG (operators/jpeg.py). At 100 TB this is the frame-extraction
+    shape: container walk + per-frame decode inside the executor
+    kernel, only sampled frames ever materialize."""
+    from sales_etl_spark.operators.avi import parse_avi_mjpeg
+    from sales_etl_spark.operators.jpeg import decode_jpeg
 
-    Grid construction (all integer-exact, threshold by
-    cross-multiplication like both sibling tiers):
+    _, _, _, frames = parse_avi_mjpeg(payload)
+    sampled = []
+    for jpeg in frames[::every_n]:
+        fw, fh, _, raster = decode_jpeg(jpeg)
+        sampled.append((fw, fh, raster))
+    return len(frames), sampled
 
-    - per frame, 8 COLUMN sums over the raster (source column
-      ``(c*width) DIV 8`` — the nearest-neighbor index map
-      png_thumbnails uses), an in-row higher-order fold;
-    - per video, sampled frames sorted by frame_idx and mapped onto 8
-      equal-index-share TEMPORAL slots (``j = (t*n_sampled) DIV 8``
-      — the audio tier's window rule applied to the time axis), so
-      grid cell (t, c) = slot t's frame's column-c sum;
-    - bit ``t*8+c`` = 1 iff cell mean >= video grid mean
-      (``cell_sum * total_cnt >= total_sum * cell_cnt``), packed into
-      two 32-bit halves exactly like the image/audio hashes so
-      ``banded_hamming_pairs`` consumes all three modalities
-      unchanged.
 
-    100 TB shape: the only exchange is ONE groupBy(media_id) whose
-    collected state is (8 col-sums + 2 ints) per SAMPLED frame —
-    bounded by the ``every_n`` sampling contract upstream (a long
-    video contributes n_frames/every_n rows; cap the sampling stride
-    per duration upstream if videos are unbounded), never raw pixels.
-    Everything else is in-row higher-order functions. Spark INTERPRETS
-    those (no codegen), so the hash projection is expensive per row —
-    a plan that lets the optimizer copy it into a pushed filter (e.g.
-    an inferred ``isnotnull(hash_lo)`` under a join) evaluates it
-    again; banded_hamming_pairs keeps such filters above its shuffle."""
-    col_sums = F.expr(
-        "transform(sequence(0, 7), c -> aggregate("
-        " sequence(0, height - 1), CAST(0 AS BIGINT),"
-        " (a, y) -> a + CAST(element_at(pixels,"
-        "   y * width + CAST((c * width) DIV 8 AS INT) + 1)"
-        "   AS BIGINT)))"
-    )
-    per_frame = frames.select(
-        "media_id",
-        F.struct(
-            F.col("frame_idx"),
-            col_sums.alias("cs"),
-            F.col("height").cast("bigint").alias("h"),
-        ).alias("fr"),
-    )
-    per_video = per_frame.groupBy("media_id").agg(
-        F.array_sort(F.collect_list("fr")).alias("fr")
-    )
-    # cells[i] for i in 0..63: temporal slot t = i DIV 8 picks frame
-    # j = (t * n_sampled) DIV 8 (1-based for element_at), spatial
-    # column c = i % 8.
-    cells = (
-        "transform(sequence(0, 63), i -> struct("
-        " element_at(element_at(fr,"
-        "   CAST((i DIV 8) * size(fr) DIV 8 AS INT) + 1).cs,"
-        "   i % 8 + 1) AS s,"
-        " element_at(fr,"
-        "   CAST((i DIV 8) * size(fr) DIV 8 AS INT) + 1).h AS c))"
-    )
-    g = per_video.select(
-        "media_id", F.expr(cells).alias("cells")
-    ).select(
-        "media_id",
-        "cells",
-        F.expr(
-            "aggregate(cells, CAST(0 AS BIGINT), (a, x) -> a + x.s)"
-        ).alias("ts"),
-        F.expr(
-            "aggregate(cells, CAST(0 AS BIGINT), (a, x) -> a + x.c)"
-        ).alias("tc"),
-    )
-
-    def packed_half(lo_bit: int) -> F.Column:
-        return F.expr(
-            f"aggregate(sequence({lo_bit}, {lo_bit + 31}),"
-            " CAST(0 AS BIGINT), (a, i) ->"
-            " a + IF(element_at(cells, i + 1).s * tc"
-            "        >= ts * element_at(cells, i + 1).c,"
-            f"       shiftleft(CAST(1 AS BIGINT), i - {lo_bit}),"
-            "        CAST(0 AS BIGINT)))"
-        )
-
-    return g.select(
-        "media_id",
-        packed_half(0).alias("hash_lo"),
-        packed_half(32).alias("hash_hi"),
+def _column_sums(width: int, height: int, raster: bytes) -> np.ndarray:
+    """The 8 int64 column sums of a frame, column c read at source
+    column ``(c * width) // 8`` (the nearest-neighbor index map of
+    :func:`_thumbnail`)."""
+    cols = (np.arange(_GRID) * width) // _GRID
+    px = np.frombuffer(raster, np.uint8)
+    return px[np.arange(height)[:, None] * width + cols].sum(
+        axis=0, dtype=np.int64
     )
 
 
-def video_motion_features(frames: DataFrame) -> DataFrame:
-    """Per-VIDEO motion envelope from decoded sampled frames — the
-    feature-extraction sibling of :func:`video_grid_signature` (same
-    in-row column-sum pooling, same bounded groupBy): rows in =
-    ``mjpeg_frame_pixels`` output; rows out = (media_id, n_frames,
-    n_sampled, motion_sum, max_delta, scene_cuts).
+def video_grid_hash(
+    frames: list[tuple[int, int, bytes]],
+) -> tuple[int, int]:
+    """``(hash_lo, hash_hi)``: the 64-bit 8x8 TEMPORAL-SPATIAL grid
+    aHash of a video's sampled frames, given in frame order as
+    ``(width, height, raster)`` — the video member of the fingerprint
+    family (image: :func:`png_ahash`; audio: :func:`wav_energy_hash`).
 
-    Each sampled frame pools in-row to its 8 spatial column sums
-    (rasters never cross an exchange); consecutive sampled pairs give
-    integer motion deltas Σ_c |Δcol_sum|; ``scene_cuts`` counts pairs
-    whose delta strictly exceeds 2x the video's mean delta
-    (cross-multiplied: ``delta * n_pairs > 2 * motion_sum`` — no
-    division). Single-sampled-frame videos emit zeros. The
-    ``IF(size < 2, ...)`` guard matters: Spark's ``sequence(2, 1)``
-    is a DESCENDING sequence, not empty."""
-    col_sums = F.expr(
-        "transform(sequence(0, 7), c -> aggregate("
-        " sequence(0, height - 1), CAST(0 AS BIGINT),"
-        " (a, y) -> a + CAST(element_at(pixels,"
-        "   y * width + CAST((c * width) DIV 8 AS INT) + 1)"
-        "   AS BIGINT)))"
+    Cell (t, c) is column sum c (:func:`_column_sums`) of the frame
+    that temporal slot t picks, ``j = (t * n_sampled) // 8`` — the
+    audio tier's equal-index-share window rule applied to the time
+    axis — and counts that frame's height in pixels. Bit ``t*8 + c``
+    is ``s * Σc >= Σs * c`` over the 64 cells' sums s and counts c:
+    the cell mean at or above the grid mean, cross-multiplied."""
+    sums = [_column_sums(*f) for f in frames]
+    slots = [(t * len(frames)) // _GRID for t in range(_GRID)]
+    s = np.stack([sums[j] for j in slots])
+    c = np.array([frames[j][1] for j in slots], dtype=np.int64)[:, None]
+    return _pack_halves((s * (c.sum() * _GRID) >= s.sum() * c).ravel())
+
+
+def mjpeg_grid_hash(media: DataFrame, every_n: int) -> DataFrame:
+    """(media_id, hash_lo, hash_hi): the :func:`video_grid_hash` of
+    every AVI-MJPEG payload's every ``every_n``-th frame, computed in
+    the decode kernel. A video with no frame yields no row."""
+
+    def grid_hash(media_id, payload):
+        _, frames = _sampled_frames(payload, every_n)
+        if frames:
+            yield (media_id, *video_grid_hash(frames))
+
+    return row_kernel(
+        media.select("media_id", "payload"), grid_hash, _HASH_DDL
     )
-    per_frame = frames.select(
-        "media_id",
-        "n_frames",
-        F.struct(F.col("frame_idx"), col_sums.alias("cs")).alias("fr"),
+
+
+def video_motion(
+    frames: list[tuple[int, int, bytes]],
+) -> tuple[int, int, int, int]:
+    """``(n_sampled, motion_sum, max_delta, scene_cuts)``: the motion
+    envelope of a video's sampled frames, given in frame order as
+    ``(width, height, raster)``. Each frame pools to its 8 column sums
+    (:func:`_column_sums`); consecutive frames give integer motion
+    deltas Σ_c |Δcol_sum|; ``scene_cuts`` counts deltas strictly above
+    2x the video's mean delta (cross-multiplied: ``delta * n_pairs >
+    2 * motion_sum``). A single frame gives zeros."""
+    deltas = np.abs(np.diff([_column_sums(*f) for f in frames], axis=0))
+    d = deltas.sum(axis=1)
+    motion = int(d.sum())
+    return (
+        len(frames),
+        motion,
+        int(d.max(initial=0)),
+        int((d * len(d) > 2 * motion).sum()),
     )
-    per_video = per_frame.groupBy("media_id").agg(
-        F.first("n_frames").cast("int").alias("n_frames"),
-        F.array_sort(F.collect_list("fr")).alias("fr"),
-    )
-    deltas = F.expr(
-        "IF(size(fr) < 2, CAST(array() AS array<bigint>),"
-        " transform(sequence(2, size(fr)), j -> aggregate("
-        "   sequence(0, 7), CAST(0 AS BIGINT), (a, c) ->"
-        "   a + abs(element_at(element_at(fr, j).cs, c + 1)"
-        "         - element_at(element_at(fr, j - 1).cs, c + 1)))))"
-    )
-    v = per_video.select(
-        "media_id",
-        "n_frames",
-        F.size("fr").cast("int").alias("n_sampled"),
-        deltas.alias("d"),
-    ).select(
-        "media_id",
-        "n_frames",
-        "n_sampled",
-        "d",
-        F.expr(
-            "aggregate(d, CAST(0 AS BIGINT), (a, x) -> a + x)"
-        ).alias("motion_sum"),
-    )
-    return v.select(
-        "media_id",
-        "n_frames",
-        "n_sampled",
-        "motion_sum",
-        F.coalesce(F.array_max("d"), F.lit(0).cast("bigint")).alias(
-            "max_delta"
-        ),
-        F.expr(
-            "CAST(size(filter(d, x ->"
-            " x * size(d) > 2 * motion_sum)) AS BIGINT)"
-        ).alias("scene_cuts"),
+
+
+def mjpeg_motion_features(media: DataFrame, every_n: int) -> DataFrame:
+    """(media_id, n_frames, n_sampled, motion_sum, max_delta,
+    scene_cuts): the :func:`video_motion` envelope of every AVI-MJPEG
+    payload's every ``every_n``-th frame, computed in the decode
+    kernel. A video with no frame yields no row."""
+
+    def motion(media_id, payload):
+        n_frames, frames = _sampled_frames(payload, every_n)
+        if frames:
+            yield (media_id, n_frames, *video_motion(frames))
+
+    return row_kernel(
+        media.select("media_id", "payload"),
+        motion,
+        "media_id long, n_frames int, n_sampled int, motion_sum long, "
+        "max_delta long, scene_cuts long",
     )
 
 

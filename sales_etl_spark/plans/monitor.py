@@ -1865,56 +1865,6 @@ def media_header_dimensions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return png.unionByName(jpeg).unionByName(gif)
 
 
-def _phash_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(media_id, hash_lo, hash_hi) — the aHash halves over every
-    fixture PNG (decode, 8x8 nearest-neighbor thumbnail, mean
-    threshold by integer cross-multiplication, 32-bit packs). The
-    shared front half of dedup_image_phash (bucket profile) and
-    dedup_phash_pairs (exact Hamming verify)."""
-    from sales_etl_spark.operators import multimodal
-
-    st = _star(spark, sf_dir)
-    return _phash_of(multimodal.documents_as_png(st.documents))
-
-
-def _phash_of(media: DataFrame) -> DataFrame:
-    """The aHash pipeline parameterized by a (media_id, payload) PNG
-    frame — so the planted recall corpus fingerprints through the
-    IDENTICAL decode/thumbnail/threshold path as the production
-    fixtures (the _vhash_of pattern applied to the image tier)."""
-    from sales_etl_spark.operators import multimodal
-
-    thumbs = multimodal.png_thumbnails(media, _THUMB, _THUMB)
-    s = F.aggregate(
-        "thumb",
-        F.lit(0).cast("bigint"),
-        lambda a, x: a + x.cast("bigint"),
-    )
-    t = thumbs.select("media_id", "thumb", s.alias("s"))
-
-    pow2 = F.array(
-        *[F.lit(1 << k).cast("bigint") for k in range(32)]
-    )
-
-    def packed_half(start: int):
-        bits = F.zip_with(
-            F.slice("thumb", start, 32),
-            pow2,
-            lambda v, p: F.when(
-                v.cast("bigint") * 64 >= F.col("s"), p
-            ).otherwise(F.lit(0).cast("bigint")),
-        )
-        return F.aggregate(
-            bits, F.lit(0).cast("bigint"), lambda a, x: a + x
-        )
-
-    return t.select(
-        "media_id",
-        packed_half(1).alias("hash_lo"),
-        packed_half(33).alias("hash_hi"),
-    )
-
-
 #: Shared oracle prefix of the perceptual-image tier: the closed-form
 #: thumbnail, aHash halves and 16-bit band explosion that both the
 #: bucket-profile query and the pair-verify query build on.
@@ -1986,31 +1936,34 @@ def dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     story: near-duplicate images collide in >= 1 band (hamming-bucket
     LSH, same recall argument as SimHash), candidate volume is
     profiled per bucket instead of materializing the quadratic pair
-    set, and the only exchange is the band groupBy. Hash math stays
-    NATIVE past the decode kernel: aggregate folds for Σv and the
-    bit-pack, shiftleft on zip_with indices, posexplode for bands."""
-    bands = _phash_hashed(spark, sf_dir).select(
-        "media_id",
-        F.posexplode(
-            F.array(
-                F.col("hash_lo") % 65536,
-                (F.col("hash_lo") / 65536).cast("bigint"),
-                F.col("hash_hi") % 65536,
-                (F.col("hash_hi") / 65536).cast("bigint"),
-            )
-        ).alias("band_idx", "band_val"),
+    set, and the only exchange is the band groupBy. The decode kernel
+    computes the hash (operators/multimodal.py:png_ahash), so only
+    (media_id, hash_lo, hash_hi) crosses into the JVM."""
+    from sales_etl_spark.operators import multimodal
+
+    st = _star(spark, sf_dir)
+    return _band_buckets(
+        multimodal.png_ahash(multimodal.documents_as_png(st.documents)),
+        "n_images",
     )
+
+
+def _band_buckets(hashed: DataFrame, count_alias: str) -> DataFrame:
+    """Every 16-bit band bucket of a (media_id, hash_lo, hash_hi) frame
+    holding >= 2 members: (band_idx, band_val, ``count_alias``,
+    n_pairs) — the bucket profile of the image, audio and video
+    tiers."""
+    from sales_etl_spark.operators import dedup
+
     n = F.count(F.lit(1)).cast("bigint")
     return (
-        bands.groupBy(
-            F.col("band_idx").cast("int").alias("band_idx"),
-            "band_val",
-        )
+        hashed.select(dedup.hash_bands())
+        .groupBy(F.col("band_idx").cast("int").alias("band_idx"), "band_val")
         .agg(
-            n.alias("n_images"),
+            n.alias(count_alias),
             (n * (n - F.lit(1)) / F.lit(2)).cast("bigint").alias("n_pairs"),
         )
-        .filter(F.col("n_images") >= 2)
+        .filter(F.col(count_alias) >= 2)
     )
 
 
@@ -2073,79 +2026,19 @@ def dedup_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     counted by a window over the one (band_idx, band_val) shuffle both
     self-join sides reuse, no cache, Hamming as two codegen bit_count
     XORs, DISTINCT so multi-band collisions verify once."""
-    from sales_etl_spark.operators import dedup
+    from sales_etl_spark.operators import dedup, multimodal
 
+    st = _star(spark, sf_dir)
     return dedup.banded_hamming_pairs(
-        _phash_hashed(spark, sf_dir),
+        multimodal.png_ahash(multimodal.documents_as_png(st.documents)),
         cap=_PAIR_CAP,
         max_hamming=_PAIR_MAX_HAMMING,
     )
 
 
-#: Perceptual-audio fingerprint geometry: 64 equal-index-share energy
-#: windows -> 64 mean-threshold bits -> four 16-bit LSH bands.
+#: Energy windows of the perceptual-audio fingerprint
+#: (operators/multimodal.py:wav_energy_hash), as its oracle states them.
 _AFP_W = 64
-
-
-def _afp_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(media_id, hash_lo, hash_hi) — the energy-envelope aHash
-    halves over every chirp-fixture clip (real PCM decode, 64
-    window energies, mean-threshold bits). Shared front half of
-    dedup_audio_fingerprint (bucket profile) and
-    dedup_audio_pairs (exact Hamming verify)."""
-    from sales_etl_spark.operators import multimodal
-
-    st = _star(spark, sf_dir)
-    return _afp_of(multimodal.documents_as_chirp_wav(st.documents))
-
-
-def _afp_of(media: DataFrame) -> DataFrame:
-    """The energy-envelope fingerprint parameterized by a
-    (media_id, payload) WAV frame — the planted recall corpus rides
-    the IDENTICAL PCM decode/window/threshold path as the chirp
-    fixtures (the _vhash_of pattern applied to the audio tier)."""
-    from sales_etl_spark.operators import multimodal
-
-    pcm = multimodal.wav_pcm_samples(media)
-    W = _AFP_W
-    ener = F.expr(f"""
-        transform(sequence(0, {W - 1}), w -> aggregate(
-            slice(samples, CAST((w * size(samples)) DIV {W} AS INT) + 1,
-                  CAST(((w + 1) * size(samples)) DIV {W} AS INT)
-                  - CAST((w * size(samples)) DIV {W} AS INT)),
-            CAST(0 AS BIGINT),
-            (a, x) -> a + CAST(x AS BIGINT) * CAST(x AS BIGINT)))
-    """).alias("e")
-    cnt = F.expr(f"""
-        transform(sequence(0, {W - 1}), w ->
-            CAST(((w + 1) * size(samples)) DIV {W} AS BIGINT)
-            - CAST((w * size(samples)) DIV {W} AS BIGINT))
-    """).alias("cnt")
-    t = pcm.select(
-        "media_id",
-        ener,
-        cnt,
-        F.expr(
-            "aggregate(samples, CAST(0 AS BIGINT), "
-            "(a, x) -> a + CAST(x AS BIGINT) * CAST(x AS BIGINT))"
-        ).alias("te"),
-        F.size("samples").cast("bigint").alias("tc"),
-    )
-
-    def packed_half(lo_bit: int) -> F.Column:
-        return F.expr(f"""
-            aggregate(sequence({lo_bit}, {lo_bit + 31}),
-                CAST(0 AS BIGINT), (a, w) ->
-                a + IF(e[w] * tc > te * cnt[w],
-                       shiftleft(CAST(1 AS BIGINT), w - {lo_bit}),
-                       CAST(0 AS BIGINT)))
-        """)
-
-    return t.select(
-        "media_id",
-        packed_half(0).alias("hash_lo"),
-        packed_half(32).alias("hash_hi"),
-    )
 
 
 #: Shared oracle prefix of the perceptual-audio tier (chirp fixture,
@@ -2220,30 +2113,16 @@ def dedup_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate-pair count. Same 100 TB shape as the image tier:
     near-duplicate audio collides in >= 1 band, candidate volume is
     profiled per bucket (never materialized quadratically), the band
-    groupBy is the only media-data exchange, and everything past the
-    Arrow decode kernel is native higher-order-function folds."""
-    bands = _afp_hashed(spark, sf_dir).select(
-        "media_id",
-        F.posexplode(
-            F.array(
-                F.col("hash_lo") % 65536,
-                (F.col("hash_lo") / 65536).cast("bigint"),
-                F.col("hash_hi") % 65536,
-                (F.col("hash_hi") / 65536).cast("bigint"),
-            )
-        ).alias("band_idx", "band_val"),
-    )
-    n = F.count(F.lit(1)).cast("bigint")
-    return (
-        bands.groupBy(
-            F.col("band_idx").cast("int").alias("band_idx"),
-            "band_val",
-        )
-        .agg(
-            n.alias("n_clips"),
-            (n * (n - F.lit(1)) / F.lit(2)).cast("bigint").alias("n_pairs"),
-        )
-        .filter(F.col("n_clips") >= 2)
+    groupBy is the only media-data exchange, and the decode kernel
+    computes the fingerprint (operators/multimodal.py:wav_energy_hash)."""
+    from sales_etl_spark.operators import multimodal
+
+    st = _star(spark, sf_dir)
+    return _band_buckets(
+        multimodal.wav_energy_hash(
+            multimodal.documents_as_chirp_wav(st.documents)
+        ),
+        "n_clips",
     )
 
 
@@ -2261,28 +2140,15 @@ def dedup_audio_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/dedup.py:banded_hamming_pairs) and the two oracles
     share one verification suffix, so a threshold tweak cannot
     diverge across modalities."""
-    from sales_etl_spark.operators import dedup
-
-    return dedup.banded_hamming_pairs(
-        _afp_hashed(spark, sf_dir),
-        cap=_PAIR_CAP,
-        max_hamming=_PAIR_MAX_HAMMING,
-    )
-
-
-def _vhash_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(media_id, hash_lo, hash_hi) — the temporal-spatial grid
-    signature over every MJPEG fixture's REAL sampled-frame decode
-    (operators/multimodal.py:video_grid_signature). Shared front half
-    of dedup_video_phash (bucket profile) and dedup_video_pairs
-    (exact Hamming verify) — the video mirror of _phash_hashed /
-    _afp_hashed."""
-    from sales_etl_spark.operators import multimodal
+    from sales_etl_spark.operators import dedup, multimodal
 
     st = _star(spark, sf_dir)
-    media = multimodal.documents_as_mjpeg(st.documents)
-    return multimodal.video_grid_signature(
-        multimodal.mjpeg_frame_pixels(media, every_n=2)
+    return dedup.banded_hamming_pairs(
+        multimodal.wav_energy_hash(
+            multimodal.documents_as_chirp_wav(st.documents)
+        ),
+        cap=_PAIR_CAP,
+        max_hamming=_PAIR_MAX_HAMMING,
     )
 
 
@@ -2368,32 +2234,19 @@ def dedup_video_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same 100 TB shape as the siblings: near-duplicate videos (same
     content, re-encoded / trimmed tails) collide in >= 1 band;
     candidate volume is profiled per bucket, never materialized
-    quadratically; the only exchanges are the bounded per-video
-    frame-signature groupBy and the band groupBy. Single-frame
-    constant videos degenerate to the all-ones hash by construction —
-    that bucket is exactly what the pair tier's DF cap drops."""
-    bands = _vhash_hashed(spark, sf_dir).select(
-        "media_id",
-        F.posexplode(
-            F.array(
-                F.col("hash_lo") % 65536,
-                (F.col("hash_lo") / 65536).cast("bigint"),
-                F.col("hash_hi") % 65536,
-                (F.col("hash_hi") / 65536).cast("bigint"),
-            )
-        ).alias("band_idx", "band_val"),
-    )
-    n = F.count(F.lit(1)).cast("bigint")
-    return (
-        bands.groupBy(
-            F.col("band_idx").cast("int").alias("band_idx"),
-            "band_val",
-        )
-        .agg(
-            n.alias("n_videos"),
-            (n * (n - F.lit(1)) / F.lit(2)).cast("bigint").alias("n_pairs"),
-        )
-        .filter(F.col("n_videos") >= 2)
+    quadratically; the decode kernel computes each video's signature
+    (operators/multimodal.py:mjpeg_grid_hash), so the only exchange is
+    the band groupBy. Single-frame constant videos degenerate to the
+    all-ones hash by construction — that bucket is exactly what the
+    pair tier's DF cap drops."""
+    from sales_etl_spark.operators import multimodal
+
+    st = _star(spark, sf_dir)
+    return _band_buckets(
+        multimodal.mjpeg_grid_hash(
+            multimodal.documents_as_mjpeg(st.documents), every_n=2
+        ),
+        "n_videos",
     )
 
 
@@ -2412,10 +2265,13 @@ def dedup_video_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     one reused band shuffle, codegen bit_count XOR verify) and the same
     oracle verification suffix, so cap/threshold semantics cannot
     diverge across modalities."""
-    from sales_etl_spark.operators import dedup
+    from sales_etl_spark.operators import dedup, multimodal
 
+    st = _star(spark, sf_dir)
     return dedup.banded_hamming_pairs(
-        _vhash_hashed(spark, sf_dir),
+        multimodal.mjpeg_grid_hash(
+            multimodal.documents_as_mjpeg(st.documents), every_n=2
+        ),
         cap=_PAIR_CAP,
         max_hamming=_PAIR_MAX_HAMMING,
     )
@@ -2452,11 +2308,13 @@ def video_dedup_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pair join is the dedup_video_pairs plan; the resolve adds one
     DISTINCT on the (small) dropped set and one broadcast-size
     left anti-pattern join back to the corpus grain."""
-    from sales_etl_spark.operators import dedup
+    from sales_etl_spark.operators import dedup, multimodal
 
     st = _star(spark, sf_dir)
     pairs = dedup.banded_hamming_pairs(
-        _vhash_hashed(spark, sf_dir),
+        multimodal.mjpeg_grid_hash(
+            multimodal.documents_as_mjpeg(st.documents), every_n=2
+        ),
         cap=_PAIR_CAP,
         max_hamming=_PAIR_MAX_HAMMING,
     )
@@ -2536,10 +2394,13 @@ def perceptual_cluster_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     END-TO-END from raw fixture bytes. Scale shape: everything up to
     the pair join is the dedup_video_pairs plan; the resolve adds
     O(log n) bounded-join rounds over the (corpus-small) pair set."""
-    from sales_etl_spark.operators import dedup
+    from sales_etl_spark.operators import dedup, multimodal
 
+    st = _star(spark, sf_dir)
     pairs = dedup.banded_hamming_pairs(
-        _vhash_hashed(spark, sf_dir),
+        multimodal.mjpeg_grid_hash(
+            multimodal.documents_as_mjpeg(st.documents), every_n=2
+        ),
         cap=_PAIR_CAP,
         max_hamming=_PAIR_MAX_HAMMING,
     )
@@ -2580,11 +2441,13 @@ def dedup_video_cluster_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-duplicates a pair-grain rule cannot see. Scale shape: the
     dedup_video_pairs plan + O(log n) CC rounds over the pair set +
     two broadcast-size left joins back to the corpus grain."""
-    from sales_etl_spark.operators import dedup
+    from sales_etl_spark.operators import dedup, multimodal
 
     st = _star(spark, sf_dir)
     pairs = dedup.banded_hamming_pairs(
-        _vhash_hashed(spark, sf_dir),
+        multimodal.mjpeg_grid_hash(
+            multimodal.documents_as_mjpeg(st.documents), every_n=2
+        ),
         cap=_PAIR_CAP,
         max_hamming=_PAIR_MAX_HAMMING,
     )
@@ -2616,28 +2479,6 @@ def dedup_video_cluster_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("bigint").alias("n_dropped_cc"),
         )
     )
-
-
-def _vhash_of(docs: DataFrame) -> DataFrame:
-    """(media_id, hash_lo, hash_hi) grid signatures for an arbitrary
-    documents frame — the _vhash_hashed pipeline parameterized by
-    input so the incremental tier can fingerprint ONLY an arriving
-    batch."""
-    from sales_etl_spark.operators import multimodal
-
-    return multimodal.video_grid_signature(
-        multimodal.mjpeg_frame_pixels(
-            multimodal.documents_as_mjpeg(docs), every_n=2
-        )
-    )
-
-
-_VHASH_BANDS_EXPR = (
-    "posexplode(array(hash_lo % 65536,"
-    " CAST(hash_lo / 65536 AS BIGINT),"
-    " hash_hi % 65536,"
-    " CAST(hash_hi / 65536 AS BIGINT)))"
-)
 
 
 @query(
@@ -2675,6 +2516,7 @@ def dedup_video_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pathlib import Path
 
     from sales_etl_spark import lake
+    from sales_etl_spark.operators import dedup, multimodal
     from sales_etl_spark.plans.extensions import _scratch
 
     st = _star(spark, sf_dir)
@@ -2688,23 +2530,15 @@ def dedup_video_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     done = Path(path) / "_build_complete"
     if not done.exists():
         shutil.rmtree(path, ignore_errors=True)
-        corpus_bands = _vhash_of(corpus).select(
-            "media_id",
-            "hash_lo",
-            "hash_hi",
-            F.expr(_VHASH_BANDS_EXPR).alias("band_idx", "band_val"),
-        )
+        corpus_bands = multimodal.mjpeg_grid_hash(
+            multimodal.documents_as_mjpeg(corpus), every_n=2
+        ).select("media_id", "hash_lo", "hash_hi", dedup.hash_bands())
         lake.commit_write(corpus_bands, path, mode="append")
         done.touch()
     index = lake.read_table(spark, path)
-    batch = _vhash_of(batch_docs).select(
-        "media_id",
-        "hash_lo",
-        "hash_hi",
-        F.expr(_VHASH_BANDS_EXPR).alias("band_idx", "band_val"),
-    )
-    from sales_etl_spark.operators import dedup
-
+    batch = multimodal.mjpeg_grid_hash(
+        multimodal.documents_as_mjpeg(batch_docs), every_n=2
+    ).select("media_id", "hash_lo", "hash_hi", dedup.hash_bands())
     return dedup.probe_banded_index(
         index, batch, cap=_PAIR_CAP, max_hamming=_PAIR_MAX_HAMMING
     )
@@ -2813,6 +2647,12 @@ def _banded_recall_eval(hashed: DataFrame) -> DataFrame:
     image/audio/video planted corpora."""
     from sales_etl_spark.operators import dedup
 
+    # Kept: without it the exact-pairs join and the banded path each
+    # decode the media again. Cold (fresh memo and clearCache()),
+    # sf0.1, local[4], medians of 3, cached vs uncached: video 6.25 vs
+    # 10.75 s (1.7x), image 2.80 vs 3.37 s (1.2x), audio 2.94 vs
+    # 3.21 s (1.1x); warm 0.85 vs 9.72, 1.41 vs 2.57, 0.96 vs 2.46 s.
+    # A memo hit after clearCache() runs uncached, within 2x of cold.
     h = hashed.cache()
     a, b = h.alias("a"), h.alias("b")
     ham = (
@@ -2889,13 +2729,11 @@ def dedup_video_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     st = _star(spark, sf_dir)
     return _banded_recall_eval(
-        multimodal.video_grid_signature(
-            multimodal.mjpeg_frame_pixels(
-                multimodal.documents_as_mjpeg_planted(
-                    st.documents.filter(F.col("doc_id") % 5 == 1)
-                ),
-                every_n=2,
-            )
+        multimodal.mjpeg_grid_hash(
+            multimodal.documents_as_mjpeg_planted(
+                st.documents.filter(F.col("doc_id") % 5 == 1)
+            ),
+            every_n=2,
         )
     )
 
@@ -3033,7 +2871,7 @@ def dedup_image_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     st = _star(spark, sf_dir)
     return _banded_recall_eval(
-        _phash_of(
+        multimodal.png_ahash(
             multimodal.documents_as_png_planted(
                 st.documents.filter(F.col("doc_id") % 5 == 2)
             )
@@ -3060,7 +2898,7 @@ def dedup_audio_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     st = _star(spark, sf_dir)
     return _banded_recall_eval(
-        _afp_of(
+        multimodal.wav_energy_hash(
             multimodal.documents_as_wav_planted(
                 st.documents.filter(F.col("doc_id") % 5 == 3)
             )
@@ -3125,23 +2963,22 @@ def media_video_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     member of the per-modality feature family (media_audio_features'
     RMS/ZCR; the PNG tier's pixel extrema): per video, the MOTION
     ENVELOPE of its sampled frame sequence. Each sampled frame
-    collapses in-row to its 8 spatial column sums (rasters never
-    cross an exchange — the video_grid_signature contract); per
-    consecutive sampled pair, the motion delta Σ_c |Δcol_sum|
-    (integer exact); per video: total motion, peak delta, and
-    SCENE-CUT count (a pair is a cut iff its delta strictly exceeds
-    2x the video's mean delta, cross-multiplied — no division). These
-    are the static-clip / slideshow / hard-cut signals a video
-    training-data pipeline gates on before spending decode-and-embed
-    budget. One bounded groupBy(media_id) (8 longs per sampled
-    frame), everything else in-row higher-order folds; the oracle
-    predicts every delta closed-form from the fixture formulas."""
+    collapses to its 8 spatial column sums; per consecutive sampled
+    pair, the motion delta Σ_c |Δcol_sum| (integer exact); per video:
+    total motion, peak delta, and SCENE-CUT count (a pair is a cut
+    iff its delta strictly exceeds 2x the video's mean delta,
+    cross-multiplied — no division). These are the static-clip /
+    slideshow / hard-cut signals a video training-data pipeline gates
+    on before spending decode-and-embed budget. The decode kernel
+    computes all of it per video (operators/multimodal.py:
+    mjpeg_motion_features), so the plan is map-only and no raster
+    crosses into the JVM; the oracle predicts every delta closed-form
+    from the fixture formulas."""
     from sales_etl_spark.operators import multimodal
 
     st = _star(spark, sf_dir)
-    media = multimodal.documents_as_mjpeg(st.documents)
-    return multimodal.video_motion_features(
-        multimodal.mjpeg_frame_pixels(media, every_n=2)
+    return multimodal.mjpeg_motion_features(
+        multimodal.documents_as_mjpeg(st.documents), every_n=2
     )
 
 

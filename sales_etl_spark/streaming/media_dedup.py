@@ -1,7 +1,8 @@
 """Streaming PERCEPTUAL media ingest dedup: each micro-batch of raw
 media payloads decodes ITSELF inside the executor kernel (AVI walk +
-per-frame JPEG decode), collapses to per-video grid signatures
-(operators/multimodal.py:video_grid_signature), probes the PERSISTED
+per-frame JPEG decode) and collapses each video to its grid signature
+in the same kernel (operators/multimodal.py:mjpeg_grid_hash), probes
+the PERSISTED
 banded-signature index for near-duplicates against everything
 ingested so far, and appends its own band rows to the index — the
 perceptual mirror of streaming/dedup_stream.py's MinHash ingest, with
@@ -12,8 +13,8 @@ banded_hamming_pairs result EXACTLY (asserted in
 tests/test_streaming.py; the cap-monotonicity caveat is documented on
 operators/dedup.py:probe_banded_index).
 
-Scale shape per micro-batch: O(batch) decode + one bounded
-signature groupBy, then a broadcast-batch probe of the index scan —
+Scale shape per micro-batch: O(batch) decode and signature, map-only,
+then a broadcast-batch probe of the index scan —
 the index is read but never reshuffled, no old video is ever
 re-decoded, and the index grows by one atomic lake commit per
 non-empty batch. The index commit is EXACTLY-ONCE under foreachBatch
@@ -38,36 +39,18 @@ operators (plans/monitor.py:dedup_video_incremental).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from sales_etl_spark import lake
-from sales_etl_spark.operators.dedup import probe_banded_index
-from sales_etl_spark.operators.multimodal import (
-    mjpeg_frame_pixels,
-    video_grid_signature,
-)
-
-#: 4x16-bit band explosion of the 64-bit signature halves — the same
-#: split every perceptual tier uses (plans/monitor.py).
-_BANDS_EXPR = (
-    "posexplode(array(hash_lo % 65536,"
-    " CAST(hash_lo / 65536 AS BIGINT),"
-    " hash_hi % 65536,"
-    " CAST(hash_hi / 65536 AS BIGINT)))"
-)
+from sales_etl_spark.operators.dedup import hash_bands, probe_banded_index
+from sales_etl_spark.operators.multimodal import mjpeg_grid_hash
 
 
 def _batch_bands(batch_df: DataFrame, every_n: int) -> DataFrame:
     """(media_id, hash_lo, hash_hi, band_idx, band_val) for one
     micro-batch of (media_id, payload) rows — decode, signature and
     band split all executor-side."""
-    return video_grid_signature(
-        mjpeg_frame_pixels(batch_df, every_n=every_n)
-    ).select(
-        "media_id",
-        "hash_lo",
-        "hash_hi",
-        F.expr(_BANDS_EXPR).alias("band_idx", "band_val"),
+    return mjpeg_grid_hash(batch_df, every_n=every_n).select(
+        "media_id", "hash_lo", "hash_hi", hash_bands()
     )
 
 

@@ -1031,8 +1031,11 @@ def test_phash_pairs_verify_contract(spark):
     reported Hamming distance exactly."""
     from pyspark.sql import functions as F
 
+    from sales_etl_spark.operators.multimodal import (
+        documents_as_png,
+        png_ahash,
+    )
     from sales_etl_spark.plans import QUERY_REGISTRY
-    from sales_etl_spark.plans.monitor import _phash_hashed
 
     sf = "/root/testdata/sf0.001"
     pairs = QUERY_REGISTRY["dedup_phash_pairs"].builder(spark, sf)
@@ -1043,7 +1046,9 @@ def test_phash_pairs_verify_contract(spark):
 
     hashes = {
         r["media_id"]: (r["hash_lo"], r["hash_hi"])
-        for r in _phash_hashed(spark, sf).collect()
+        for r in png_ahash(
+            documents_as_png(spark.read.parquet(f"{sf}/documents.parquet"))
+        ).collect()
     }
     for r in rows[:50]:
         lo_a, hi_a = hashes[r["media_a"]]
@@ -1056,8 +1061,11 @@ def test_audio_pairs_verify_contract(spark):
     """dedup_audio_pairs: the audio twin of the phash pair contract —
     ordered pairs, hamming <= 6, distances consistent with the full
     fingerprints."""
+    from sales_etl_spark.operators.multimodal import (
+        documents_as_chirp_wav,
+        wav_energy_hash,
+    )
     from sales_etl_spark.plans import QUERY_REGISTRY
-    from sales_etl_spark.plans.monitor import _afp_hashed
 
     sf = "/root/testdata/sf0.001"
     rows = (
@@ -1070,7 +1078,11 @@ def test_audio_pairs_verify_contract(spark):
     assert all(0 <= r["hamming"] <= 6 for r in rows)
     hashes = {
         r["media_id"]: (r["hash_lo"], r["hash_hi"])
-        for r in _afp_hashed(spark, sf).collect()
+        for r in wav_energy_hash(
+            documents_as_chirp_wav(
+                spark.read.parquet(f"{sf}/documents.parquet")
+            )
+        ).collect()
     }
     for r in rows[:50]:
         lo_a, hi_a = hashes[r["media_a"]]
@@ -1104,43 +1116,34 @@ def test_banded_hamming_pairs_drops_hot_buckets(spark):
     assert got == {(100, 101, 1)}, got
 
 
-def test_video_grid_signature_semantics(spark):
-    """video_grid_signature on engineered frames: (a) temporal slots —
-    two uniform frames (dim then bright) must put the bright frame's
-    half of the grid above the video mean (hash_lo = 0, hash_hi =
-    2^32-1); (b) spatial columns — a single 16x2 frame whose right
-    half is bright must set exactly the c >= 4 column bits of every
-    temporal row (0xF0F0F0F0 in both halves), proving the
-    nearest-neighbor column map (c*width) DIV 8 and the h-weighted
-    cross-multiplied threshold."""
-    from sales_etl_spark.operators.multimodal import video_grid_signature
+def test_video_grid_signature_semantics():
+    """video_grid_hash on engineered frames: (a) temporal slots — two
+    uniform frames (dim then bright) must put the bright frame's half
+    of the grid above the video mean (hash_lo = 0, hash_hi = 2^32-1);
+    (b) spatial columns — a single 16x2 frame whose right half is
+    bright must set exactly the c >= 4 column bits of every temporal
+    row (0xF0F0F0F0 in both halves), proving the nearest-neighbor
+    column map (c*width) DIV 8 and the h-weighted cross-multiplied
+    threshold."""
+    from sales_etl_spark.operators.multimodal import video_grid_hash
 
-    rows = [
-        # video 1: frame 0 all 10s, frame 2 all 30s (8x8, sampled)
-        (1, 0, 2, 8, 8, [10] * 64),
-        (1, 2, 2, 8, 8, [30] * 64),
-        # video 2: one 16x2 frame, left half 0, right half 100
-        (2, 0, 1, 16, 2, ([0] * 8 + [100] * 8) * 2),
-    ]
-    frames = spark.createDataFrame(
-        rows,
-        "media_id long, frame_idx int, n_frames int, "
-        "width int, height int, pixels array<int>",
-    )
-    got = {
-        r["media_id"]: (r["hash_lo"], r["hash_hi"])
-        for r in video_grid_signature(frames).collect()
-    }
-    assert got[1] == (0, 0xFFFFFFFF), got[1]
-    assert got[2] == (0xF0F0F0F0, 0xF0F0F0F0), got[2]
+    # video 1: sampled frames all 10s, then all 30s (8x8)
+    dim_bright = [(8, 8, bytes([10] * 64)), (8, 8, bytes([30] * 64))]
+    assert video_grid_hash(dim_bright) == (0, 0xFFFFFFFF)
+    # video 2: one 16x2 frame, left half 0, right half 100
+    halves = [(16, 2, bytes(([0] * 8 + [100] * 8) * 2))]
+    assert video_grid_hash(halves) == (0xF0F0F0F0, 0xF0F0F0F0)
 
 
 def test_video_pairs_verify_contract(spark):
     """dedup_video_pairs: the video leg of the perceptual pair
     contract — ordered pairs, hamming <= 6, distances consistent with
     the full grid signatures recomputed independently."""
+    from sales_etl_spark.operators.multimodal import (
+        documents_as_mjpeg,
+        mjpeg_grid_hash,
+    )
     from sales_etl_spark.plans import QUERY_REGISTRY
-    from sales_etl_spark.plans.monitor import _vhash_hashed
 
     sf = "/root/testdata/sf0.001"
     rows = (
@@ -1153,7 +1156,10 @@ def test_video_pairs_verify_contract(spark):
     assert all(0 <= r["hamming"] <= 6 for r in rows)
     hashes = {
         r["media_id"]: (r["hash_lo"], r["hash_hi"])
-        for r in _vhash_hashed(spark, sf).collect()
+        for r in mjpeg_grid_hash(
+            documents_as_mjpeg(spark.read.parquet(f"{sf}/documents.parquet")),
+            every_n=2,
+        ).collect()
     }
     for r in rows[:50]:
         lo_a, hi_a = hashes[r["media_a"]]
@@ -1162,42 +1168,23 @@ def test_video_pairs_verify_contract(spark):
         assert want == r["hamming"], (r, want)
 
 
-def test_video_motion_features_semantics(spark):
-    """video_motion_features on engineered frames: a static 3-frame
-    video has motion 0 and no cuts; a video with two small deltas and
-    one hard cut counts exactly one scene cut (strict 2x-mean rule);
-    a single-sampled-frame video emits zeros (the sequence(2,1)
-    descending-sequence guard)."""
-    from sales_etl_spark.operators.multimodal import video_motion_features
+def test_video_motion_features_semantics():
+    """video_motion on engineered frames: a static 3-frame video has
+    motion 0 and no cuts; a video with two small deltas and one hard
+    cut counts exactly one scene cut (strict 2x-mean rule); a
+    single-sampled-frame video emits zeros."""
+    from sales_etl_spark.operators.multimodal import video_motion
 
-    rows = [
-        # video 1: three identical 8x1 frames -> static
-        (1, 0, 6, 8, 1, [5] * 8),
-        (1, 2, 6, 8, 1, [5] * 8),
-        (1, 4, 6, 8, 1, [5] * 8),
-        # video 2: deltas 8, 8, then a hard cut of 800
-        (2, 0, 8, 8, 1, [0] * 8),
-        (2, 2, 8, 8, 1, [1] * 8),   # delta 8
-        (2, 4, 8, 8, 1, [2] * 8),   # delta 8
-        (2, 6, 8, 8, 1, [102] * 8),  # delta 800 > 2*mean(272)
-        # video 3: single sampled frame
-        (3, 2, 2, 8, 1, [9] * 8),
-    ]
-    frames = spark.createDataFrame(
-        rows,
-        "media_id long, frame_idx int, n_frames int, "
-        "width int, height int, pixels array<int>",
-    )
-    got = {
-        r["media_id"]: (
-            r["n_sampled"], r["motion_sum"], r["max_delta"],
-            r["scene_cuts"],
-        )
-        for r in video_motion_features(frames).collect()
-    }
-    assert got[1] == (3, 0, 0, 0), got[1]
-    assert got[2] == (4, 816, 800, 1), got[2]
-    assert got[3] == (1, 0, 0, 0), got[3]
+    def frame(v):  # one 8x1 frame of constant value v
+        return 8, 1, bytes([v] * 8)
+
+    # video 1: three identical frames -> static
+    assert video_motion([frame(5)] * 3) == (3, 0, 0, 0)
+    # video 2: deltas 8, 8, then a hard cut of 800 > 2*mean(272)
+    cut = [frame(0), frame(1), frame(2), frame(102)]
+    assert video_motion(cut) == (4, 816, 800, 1)
+    # video 3: single sampled frame
+    assert video_motion([frame(9)]) == (1, 0, 0, 0)
 
 
 def test_video_incremental_equals_full_restricted(spark):
@@ -1238,8 +1225,7 @@ def test_planted_variants_land_at_exact_hamming_k(spark):
     from sales_etl_spark.operators.multimodal import (
         VARIANT_OFFSET,
         documents_as_mjpeg_planted,
-        mjpeg_frame_pixels,
-        video_grid_signature,
+        mjpeg_grid_hash,
     )
 
     docs = (
@@ -1247,9 +1233,7 @@ def test_planted_variants_land_at_exact_hamming_k(spark):
         .filter("doc_id % 5 = 1 AND doc_id < 300")
         .select("doc_id", "n_chars")
     )
-    sig = video_grid_signature(
-        mjpeg_frame_pixels(documents_as_mjpeg_planted(docs), every_n=2)
-    )
+    sig = mjpeg_grid_hash(documents_as_mjpeg_planted(docs), every_n=2)
     rows = {r.media_id: (r.hash_lo, r.hash_hi) for r in sig.collect()}
     seen = set()
     for mid, (lo, hi) in rows.items():
@@ -1274,16 +1258,17 @@ def test_planted_image_audio_variants_exact_hamming_k(spark):
         VARIANT_OFFSET,
         documents_as_png_planted,
         documents_as_wav_planted,
+        png_ahash,
+        wav_energy_hash,
     )
-    from sales_etl_spark.plans.monitor import _afp_of, _phash_of
 
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
     ).select("doc_id", "n_chars")
 
     for gen, hasher, residue in (
-        (documents_as_png_planted, _phash_of, 2),
-        (documents_as_wav_planted, _afp_of, 3),
+        (documents_as_png_planted, png_ahash, 2),
+        (documents_as_wav_planted, wav_energy_hash, 3),
     ):
         sub = docs.filter(f"doc_id % 5 = {residue} AND doc_id < 300")
         rows = {

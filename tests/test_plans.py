@@ -399,19 +399,19 @@ _PYTHON_OK = {
     # real LZW GIF decode (third image format; lossless => arbitrary
     # rasters on the hash)
     "media_gif_decode",
-    # perceptual-hash banding over the PNG decode+resize kernels; the
-    # aHash bit-pack and band groupBy are native
+    # perceptual-hash banding: the PNG decode kernel yields the aHash
+    # (operators/multimodal.py:png_ahash); the band groupBy is native
     "dedup_image_phash",
-    # audio sibling: PCM decode kernel; window energies, the
-    # energy-envelope aHash bit-pack and band groupBy are native
+    # audio sibling: the PCM decode kernel yields the energy-envelope
+    # fingerprint; the band groupBy is native
     "dedup_audio_fingerprint",
-    # same PNG decode kernels as dedup_image_phash; the band join and
+    # same aHash kernel as dedup_image_phash; the band join and
     # bit_count(XOR) Hamming verify are native
     "dedup_phash_pairs",
-    # same PCM decode kernel as dedup_audio_fingerprint; native verify
+    # same fingerprint kernel as dedup_audio_fingerprint; native verify
     "dedup_audio_pairs",
-    # AVI walk + JPEG decode kernel (the media_mjpeg_frames lineage);
-    # the grid signature, band groupBy and Hamming verify are native
+    # AVI walk + JPEG decode kernel yielding the grid signature; the
+    # band groupBy and Hamming verify are native
     "dedup_video_phash",
     "dedup_video_pairs",
     "video_dedup_pipeline_e2e",
@@ -424,8 +424,7 @@ _PYTHON_OK = {
     # brute-force + banded comparison is native
     "dedup_image_recall_eval",
     "dedup_audio_recall_eval",
-    # same AVI/JPEG decode kernel; column sums, motion deltas and the
-    # scene-cut rule are in-row native folds
+    # same AVI/JPEG decode kernel, yielding the motion envelope
     "media_video_features",
     # batch-side decode kernel only; index scan + broadcast probe and
     # the Hamming verify are native
@@ -959,14 +958,46 @@ def test_media_fingerprints_are_map_only(spark):
             assert "pixels" not in exchanges[0], (name, body)
 
 
+#: Every query that fingerprints or pools decoded media: the image,
+#: audio and video hash tiers and the video motion features.
+_MEDIA_REDUCTION_QUERIES = (
+    "dedup_image_phash", "dedup_phash_pairs", "dedup_image_recall_eval",
+    "dedup_audio_fingerprint", "dedup_audio_pairs",
+    "dedup_audio_recall_eval",
+    "dedup_video_phash", "dedup_video_pairs", "video_dedup_pipeline_e2e",
+    "perceptual_cluster_resolve", "dedup_video_cluster_e2e",
+    "dedup_video_incremental", "dedup_video_recall_eval",
+    "media_video_features",
+)
+
+
+@pytest.mark.parametrize("name", _MEDIA_REDUCTION_QUERIES)
+def test_media_reductions_hold_no_higher_order_function(spark, name):
+    """Each fingerprint and the motion envelope is computed in the
+    decode kernel, which yields only its result: the optimized plan
+    holds no interpreted higher-order function (``lambdafunction``),
+    fresh or rebuilt from the memo after ``clearCache()``. A HOF over a
+    shipped raster is not codegen'd, and pushdown can copy it into a
+    per-row filter — the cliff an evicted cache used to expose. Reads
+    the optimized plans only."""
+    from sales_etl_spark.plans.registry import clear_plan_cache
+
+    clear_plan_cache()
+    spark.catalog.clearCache()
+    plans = [_build(spark, name)]
+    spark.catalog.clearCache()
+    plans.append(_build(spark, name))  # memo hit
+    for df in plans:
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "lambdafunction" not in plan, plan
+
+
 def test_video_signature_exchanges_are_bounded(spark):
-    """The video perceptual tier aggregates ACROSS frames (unlike the
-    map-only fingerprints), so it legitimately shuffles — but only
-    BOUNDED rows: the per-video signature fold moves (8 col-sums +
-    2 ints) per sampled frame, the band tiers move (id, band) rows.
-    Raw rasters and media payloads must never cross an exchange — a
-    plan that shuffles the pixels column re-serializes the whole
-    corpus at 100 TB."""
+    """The video perceptual tier shuffles only BOUNDED rows: the
+    decode kernel yields one signature per video, and the band tiers
+    move (id, band) rows. Raw rasters and media payloads must never
+    cross an exchange — a plan that shuffles the pixels column
+    re-serializes the whole corpus at 100 TB."""
     for name in ("dedup_video_phash", "dedup_video_pairs"):
         plan = _formatted(_build(spark, name))
         body = plan.split("== Physical Plan ==")[1]

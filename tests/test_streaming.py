@@ -1348,8 +1348,7 @@ def test_stream_media_dedup_converges_to_batch_result(spark, tmp_path):
     from sales_etl_spark.operators.dedup import banded_hamming_pairs
     from sales_etl_spark.operators.multimodal import (
         documents_as_mjpeg,
-        mjpeg_frame_pixels,
-        video_grid_signature,
+        mjpeg_grid_hash,
     )
     from sales_etl_spark.streaming.media_dedup import stream_media_dedup
 
@@ -1385,7 +1384,7 @@ def test_stream_media_dedup_converges_to_batch_result(spark, tmp_path):
         (r.media_a, r.media_b, r.hamming)
         for r in spark.read.parquet(pairs_path).collect()
     }
-    want_sig = video_grid_signature(mjpeg_frame_pixels(media, every_n=2))
+    want_sig = mjpeg_grid_hash(media, every_n=2)
     want = {
         (r.media_a, r.media_b, r.hamming)
         for r in banded_hamming_pairs(want_sig, cap=500).collect()
@@ -1409,8 +1408,7 @@ def test_stream_media_dedup_cap_crossing_yields_superset(spark, tmp_path):
     from sales_etl_spark.operators.dedup import banded_hamming_pairs
     from sales_etl_spark.operators.multimodal import (
         documents_as_mjpeg,
-        mjpeg_frame_pixels,
-        video_grid_signature,
+        mjpeg_grid_hash,
     )
     from sales_etl_spark.streaming.media_dedup import stream_media_dedup
 
@@ -1444,7 +1442,7 @@ def test_stream_media_dedup_cap_crossing_yields_superset(spark, tmp_path):
         (r.media_a, r.media_b, r.hamming)
         for r in spark.read.parquet(pairs_path).collect()
     }
-    want_sig = video_grid_signature(mjpeg_frame_pixels(media, every_n=2))
+    want_sig = mjpeg_grid_hash(media, every_n=2)
     want = {
         (r.media_a, r.media_b, r.hamming)
         for r in banded_hamming_pairs(want_sig).collect()
@@ -1464,8 +1462,7 @@ def test_media_batch_replay_skipped_preserves_convergence(spark, tmp_path):
     from sales_etl_spark.operators.dedup import banded_hamming_pairs
     from sales_etl_spark.operators.multimodal import (
         documents_as_mjpeg,
-        mjpeg_frame_pixels,
-        video_grid_signature,
+        mjpeg_grid_hash,
     )
     from sales_etl_spark.streaming.media_dedup import process_media_batch
 
@@ -1504,7 +1501,7 @@ def test_media_batch_replay_skipped_preserves_convergence(spark, tmp_path):
         (r.media_a, r.media_b, r.hamming)
         for r in spark.read.parquet(pairs_path).collect()
     }
-    want_sig = video_grid_signature(mjpeg_frame_pixels(media, every_n=2))
+    want_sig = mjpeg_grid_hash(media, every_n=2)
     want = {
         (r.media_a, r.media_b, r.hamming)
         for r in banded_hamming_pairs(want_sig, cap=500).collect()

@@ -10,13 +10,13 @@ of ``__spark_entry__``; the master is ``get_spark``'s default,
 ``local[$SPARK_GRAFT_CPUS or *]``. One JSON line per query:
 
 - set-up: one job and one read of each table in ``--sf``, untimed;
-- cold: fresh plan memo and ``clearCache()``; the builder call is timed
-  under job group ``<q>|build``, ``executedPlan()`` as ``catalyst_s``,
-  and one ``noop`` write under ``<q>|exec`` as ``exec_s``. The build
-  group's job count is ``build_jobs``; as in ``perfbench``, it includes
-  one schema-read job for each star table the query is the first in the
-  process to load (``sources/star.py`` keeps loaded tables per
-  application);
+- cold: fresh plan memo, fresh star-schema memo (``sources/star.py``)
+  and ``clearCache()``; the builder call is timed under job group
+  ``<q>|build``, ``executedPlan()`` as ``catalyst_s``, and one ``noop``
+  write under ``<q>|exec`` as ``exec_s``. The build group's job count
+  is ``build_jobs``; it includes one schema-read job for each star
+  table the query loads, so every cold build, in every round and on
+  either ``--ab`` side, pays the same schema reads;
 - warm: one untimed ``noop`` write of the memo hit, then ``--runs``
   timed ones (``warm_min_s``, ``warm_median_s``), under ``<q>|warm``;
 - stages: per job group, the status-API totals of ``SparkStats``;
@@ -27,11 +27,10 @@ of ``__spark_entry__``; the master is ``get_spark``'s default,
 ``--ab PINNED_TREE`` (a directory holding a ``sales_etl_spark/``, e.g.
 a ``git worktree``) profiles each query ``--runs`` rounds on both
 trees in one JVM, alternating which side goes first, and reports each
-side's medians and the head/pin ratio of the timing medians. Each
-switch imports the package afresh, so every A/B profile also pays its
-star tables' first loads. Python workers import the package from the
-working directory (or the package shipped by the first builder call),
-so a change inside a worker-side kernel is not A/B'd by this mode.
+side's medians and the head/pin ratio of the timing medians. Python
+workers import the package from the working directory (or the package
+shipped by the first builder call), so a change inside a worker-side
+kernel is not A/B'd by this mode.
 """
 
 from __future__ import annotations
@@ -166,6 +165,9 @@ def profile(spark, stats: SparkStats, registry: dict, clear_plan_cache,
     g = f"{group}{name}"
     builder = registry[name].builder
     clear_plan_cache()
+    # the star memo of the tree ``registry`` came from: sys.modules
+    # holds the active tree's package
+    importlib.import_module(f"{PKG}.sources.star")._STAR_CACHE.clear()
     spark.catalog.clearCache()
     stats.tag(f"{g}|build")
     t0 = time.perf_counter()
